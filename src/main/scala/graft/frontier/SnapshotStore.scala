@@ -1,8 +1,14 @@
 package graft.frontier
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
+import scala.util.Failure
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
+import org.apache.spark.sql.types._
 
 /** Iceberg-style snapshot layer over Parquet (SURVEY.md §7.0: no Iceberg
   * jars offline, so this provides the same commit semantics behind an
@@ -31,6 +37,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * round-2 scale-killers A+B: at 10^10 URLs the seen shards alone are
   * ~12 GB of parquet that a full layout rewrites every round). Periodic
   * full commits (compaction) bound the read-side merge fan-in.
+  *
+  * The merge is ONE parquet scan over the listed `v=base..K/<table>` dirs
+  * with `basePath` = `baseDir`, so `v` is a partition column; a window
+  * keeps the row with the largest `v` per key. Every read passes the
+  * engine-owned schema ([[SnapshotStore.FrontierSchema]], [[SnapshotStore.HostsSchema]],
+  * [[SnapshotStore.SeenSchema]]) instead of inferring it from footers:
+  * opening a state table launches no Spark job at any delta depth, and the
+  * plan is the same at every depth (so its generated code is too). A
+  * column a version's files lack (the optional `source`, `inserts`) reads
+  * as null. Whether the frontier carries `source` is a manifest key
+  * (`frontierSource`), never inferred from the files.
   *
   * The manifest carries the driver-side scalars (round, nextId, counters,
   * per-table formats and bases) that make a resumed run bit-identical to
@@ -85,16 +102,27 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
     // history reads as a single scan — a per-version union's plan grows
     // O(versions) (round-2 VERDICT perf minor). Orphan dirs from a crash
     // can only be > latest committed version: allResults filters them out.
+    //
+    // EVERY write is awaited before a failure propagates (`Future.sequence`
+    // fails fast): a caller that retries the commit must never race sibling
+    // writes still landing in the same `v=K/` dirs. The first failure is
+    // rethrown with the others attached as suppressed.
     {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
       implicit val ec: scala.concurrent.ExecutionContext = SnapshotStore.commitEc
       val writes =
         Future(frontier.write.mode("overwrite").parquet(dir(v, "frontier"))) ::
           Future(hosts.write.mode("overwrite").parquet(dir(v, "hosts"))) ::
           results.map(r => Future(r.write.mode("overwrite").parquet(resultsDir(v)))).toList :::
           concurrent.map(u => Future(u())).toList
-      Await.result(Future.sequence(writes), Duration.Inf)
+      val failures = writes.flatMap(w => Await.ready(w, Duration.Inf).value.collect {
+        case Failure(e) => e
+      })
+      failures match {
+        case first :: rest =>
+          rest.filter(_ ne first).foreach(first.addSuppressed)
+          throw first
+        case Nil =>
+      }
     }
     val json = SnapshotStore.writeFlat(
       metaLazy ++ Map("version" -> v.toString, "hasResults" -> results.isDefined.toString))
@@ -106,47 +134,49 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
   def readMeta(v: Int): Map[String, String] =
     SnapshotStore.parseFlat(Files.readString(manifestPath(v)))
 
-  /** Merge-on-read reconstruction of a delta-layout table at version `v`:
-    * union base..v, keep the NEWEST row per `key` — Iceberg merge-on-read
-    * semantics over plain parquet. The window's shuffle is on the same key
-    * the consuming join shuffles on anyway; what the layout buys is write
-    * cost ∝ changed rows instead of ∝ table size per round. */
-  private def mergeOnRead(part: String, key: String, base: Int, v: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val parts = (base to v).map(k =>
-      spark.read.parquet(dir(k, part)).withColumn("__v", lit(k)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col("__v").desc)
-    parts.reduce(_.unionByName(_, allowMissingColumns = true))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__v", "__rn")
+  /** One state table at version `v` read with its engine-owned `schema`:
+    * the single `v` dir for a full commit, or — under the delta layout —
+    * ONE scan over `v=base..v` (`basePath` makes `v` a partition column)
+    * keeping the NEWEST row per `key`: Iceberg merge-on-read semantics over
+    * plain parquet. The window's shuffle is on the same key the consuming
+    * join shuffles on anyway; what the layout buys is write cost ∝ changed
+    * rows instead of ∝ table size per round. */
+  private def readTable(part: String, schema: StructType, key: String,
+                        delta: Option[Int], v: Int): DataFrame = delta match {
+    case None => spark.read.schema(schema).parquet(dir(v, part))
+    case Some(base) =>
+      val w = Window.partitionBy(col(key)).orderBy(col("v").desc)
+      spark.read.schema(schema.add("v", IntegerType)).option("basePath", baseDir)
+        .parquet((base to v).map(dir(_, part)): _*)
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .drop("v", "__rn")
   }
+
+  /** The delta base of `table` at a committed version, None when the
+    * version is a full commit (or has no manifest). */
+  private def deltaBase(meta: Map[String, String], table: String): Option[Int] =
+    if (meta.get(s"${table}Format").contains("delta")) Some(meta(s"${table}Base").toInt)
+    else None
 
   /** The frontier at version v (merged view under the delta layout). */
   def readFrontier(v: Int): DataFrame = {
     val meta = readMeta(v)
-    meta.get("frontierFormat") match {
-      case Some("delta") => mergeOnRead("frontier", "id", meta("frontierBase").toInt, v)
-      case _ => spark.read.parquet(dir(v, "frontier"))
-    }
+    readTable("frontier",
+      SnapshotStore.frontierSchema(meta.get("frontierSource").contains("true")),
+      "id", deltaBase(meta, "frontier"), v)
   }
 
   /** Host politeness/breaker state at version v (merged view under the
     * delta layout — a delta commit writes only the hosts the round
     * touched, never the full 10^8-host table). */
-  def readHosts(v: Int): DataFrame = {
-    val meta = readMeta(v)
-    meta.get("hostsFormat") match {
-      case Some("delta") => mergeOnRead("hosts", "host", meta("hostsBase").toInt, v)
-      case _ => spark.read.parquet(dir(v, "hosts"))
-    }
-  }
+  def readHosts(v: Int): DataFrame =
+    readTable("hosts", SnapshotStore.HostsSchema, "host", deltaBase(readMeta(v), "hosts"), v)
 
-  /** R7 seen-filter shards ((shard, bytes) rows), written as part of the
-    * same write-audit-publish cycle when the engine runs with the bloom
-    * pre-filter; absent otherwise. Must be written BEFORE `commit` seals
-    * the manifest. Under the delta layout the writer passes only the
+  /** R7 seen-filter shards ((shard, bytes, inserts) rows), written as part
+    * of the same write-audit-publish cycle when the engine runs with the
+    * bloom pre-filter; absent otherwise. Must be written BEFORE `commit`
+    * seals the manifest. Under the delta layout the writer passes only the
     * shards the round's new keys touched; [[readSeen]] merges
     * keep-latest-by-shard over base..v. */
   def writeSeen(v: Int, seen: DataFrame): Unit =
@@ -156,10 +186,7 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
       (Files.exists(manifestPath(v)) && readMeta(v).contains("seenFormat"))
   def readSeen(v: Int): DataFrame = {
     val meta = if (Files.exists(manifestPath(v))) readMeta(v) else Map.empty[String, String]
-    meta.get("seenFormat") match {
-      case Some("delta") => mergeOnRead("seen", "shard", meta("seenBase").toInt, v)
-      case _ => spark.read.parquet(dir(v, "seen"))
-    }
+    readTable("seen", SnapshotStore.SeenSchema, "shard", deltaBase(meta, "seen"), v)
   }
 
   def hasResults(v: Int): Boolean = readMeta(v).get("hasResults").contains("true")
@@ -202,6 +229,28 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
 }
 
 object SnapshotStore {
+  /** Engine-owned state-table schemas: exactly what the engine's writers
+    * produce (pinned against the parquet footers by SnapshotStoreSpec), all
+    * fields nullable so a column an older version's files lack reads as
+    * null. A column added to a writer must be added here too, or the
+    * fixed-schema reader drops it. */
+  val FrontierSchema: StructType = StructType(Seq(
+    StructField("id", LongType), StructField("url", StringType),
+    StructField("urlNorm", StringType), StructField("host", StringType),
+    StructField("status", StringType), StructField("attempt", IntegerType),
+    StructField("priority", IntegerType), StructField("warcTs", LongType),
+    StructField("discoveredRound", IntegerType), StructField("projectId", StringType),
+    StructField("taskType", StringType)))
+  /** The frontier with the A12 write-back `source` column. */
+  def frontierSchema(withSource: Boolean): StructType =
+    if (withSource) FrontierSchema.add("source", StringType) else FrontierSchema
+  val HostsSchema: StructType = StructType(Seq(
+    StructField("host", StringType), StructField("nextTick", LongType),
+    StructField("failCount", IntegerType)))
+  val SeenSchema: StructType = StructType(Seq(
+    StructField("shard", IntegerType), StructField("bytes", BinaryType),
+    StructField("inserts", LongType)))
+
   /** One `"key":"value"` pair with escape-aware string bodies. */
   private[frontier] val pairRe = """"((?:[^"\\]|\\.)*)":"((?:[^"\\]|\\.)*)"""".r
 

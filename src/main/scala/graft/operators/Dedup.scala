@@ -171,6 +171,11 @@ object Dedup {
     * (`SqlQueueTaskProvider.scala:73-77`; min-id here because training-data
     * dedup conventionally keeps the earliest-crawled doc).
     *
+    * Output covers only docs that appear in at least one pair: a doc with
+    * no near-duplicate is its own singleton cluster and is ABSENT from the
+    * result. A caller that needs every doc left-joins its documents on
+    * `doc_id` and reads a null `keep_id` as the doc keeping itself.
+    *
     * Algorithm: alternating large-star / small-star (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond") — each operation is
     * one window + one shuffle over the edge list, converges in O(log²)

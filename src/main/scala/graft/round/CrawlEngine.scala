@@ -271,6 +271,15 @@ object CrawlEngine {
     spark.table(table)
   }
 
+  /** The [[hostRules]] row as staged in `robots_rules/`: read with this
+    * schema, a resumed driver opens the rules without a schema job. */
+  val RobotsRulesSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("host", StringType),
+      StructField("rbAllow", ArrayType(StringType)), StructField("rbDisallow", ArrayType(StringType)),
+      StructField("rbDelayTicks", LongType)))
+  }
+
   /** Robots rules persisted at corpus-stage time (see [[corpusStagedBucketed]]).
     * Outer None: the marker predates robots staging or is absent — the
     * caller derives rules from the corpus. Inner None: the staged corpus
@@ -284,32 +293,23 @@ object CrawlEngine {
       .get("robotsHosts") match {
         case Some("0") => Some(None)
         case Some(_) if java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/robots_rules")) =>
-          Some(Some(spark.read.parquet(s"$dir/robots_rules")))
+          Some(Some(spark.read.schema(RobotsRulesSchema).parquet(s"$dir/robots_rules")))
         case _ => None
       }
   }
 
   /** Snapshot schema back-compat (round-2 ADVICE): frontiers written before
-    * the multi-project round lack projectId/taskType — backfill the
-    * configured defaults so resume works instead of raising
-    * AnalysisException. New commits stamp `schemaVersion` so future
+    * the multi-project round lack projectId/taskType — the fixed-schema
+    * read yields them as null, and this backfills the configured defaults
+    * so resume works. New commits stamp `schemaVersion` so future
     * incompatibilities can fail with a clear message instead. */
-  private[graft] def frontierCompat(df: DataFrame, cfg: CrawlConfig): DataFrame = {
-    val cols = df.columns.toSet
-    // add-or-coalesce: a missing column is backfilled whole; a present one
-    // gets nulls filled (a delta merge over mixed-era snapshots null-fills
-    // old rows via unionByName allowMissingColumns)
-    def fill(d: DataFrame, name: String, default: Column): DataFrame =
-      if (!cols(name)) d.withColumn(name, default)
-      else d.withColumn(name, coalesce(col(name), default))
-    fill(fill(df, "projectId", lit(cfg.projects.head.projectId)),
-      "taskType", lit(cfg.projects.head.taskType))
-  }
+  private[graft] def frontierCompat(df: DataFrame, cfg: CrawlConfig): DataFrame =
+    df.withColumn("projectId", coalesce(col("projectId"), lit(cfg.projects.head.projectId)))
+      .withColumn("taskType", coalesce(col("taskType"), lit(cfg.projects.head.taskType)))
 
-  /** Hosts-table back-compat: pre-D3 snapshots lack failCount. */
+  /** Hosts-table back-compat: pre-D3 snapshots lack failCount (read as null). */
   private[graft] def hostsCompat(df: DataFrame): DataFrame =
-    if (!df.columns.contains("failCount")) df.withColumn("failCount", lit(0))
-    else df.withColumn("failCount", coalesce(col("failCount"), lit(0)))
+    df.withColumn("failCount", coalesce(col("failCount"), lit(0)))
 
   /** Bootstrap snapshot v=0 from a seed list. */
   def bootstrap(
@@ -355,7 +355,7 @@ object CrawlEngine {
     store.commit(0, frontier0, hosts0, None,
       Map("nextRound" -> "0", "nextId" -> rows.size.toString,
         "schemaVersion" -> "3",
-        "frontierFormat" -> "full", "frontierBase" -> "0",
+        "frontierFormat" -> "full", "frontierBase" -> "0", "frontierSource" -> "false",
         "hostsFormat" -> "full", "hostsBase" -> "0") ++
         (if (!cfg.seenFilter) Map.empty[String, String]
          else Map("seenFormat" -> "full", "seenBase" -> "0",
@@ -435,15 +435,16 @@ object CrawlEngine {
 
     val meta0 = store.readMeta(version)
     // pre-round-3 snapshots lack projectId/taskType (frontier) and
-    // failCount (hosts): backfill defaults on read so an old state dir
-    // resumes instead of failing with AnalysisException (round-2 ADVICE)
+    // failCount (hosts): the fixed-schema read yields nulls there, and the
+    // compat projections backfill the defaults (round-2 ADVICE)
     val frontier = frontierCompat(store.readFrontier(version), cfg)
     val hosts = hostsCompat(store.readHosts(version))
     // a snapshot written WITH the write-back sink carries a `source` column;
     // resuming it without the sink must not drop previously written-back
     // text on the next full rewrite (round-4 ADVICE #3) — carry the column
-    // through unchanged whenever it exists, merge into it only when the
-    // sink is registered
+    // through unchanged whenever it exists (the manifest's `frontierSource`
+    // key, which this commit re-stamps), merge into it only when the sink
+    // is registered
     val carrySource = writeBack || frontier.columns.contains("source")
     // merge-on-read layout: write only changed rows this round, unless this
     // commit is a compaction point (periodic full rewrite bounds the
@@ -874,6 +875,7 @@ object CrawlEngine {
         "schemaVersion" -> "3",
         "frontierFormat" -> (if (deltaMode) "delta" else "full"),
         "frontierBase" -> (if (deltaMode) prevBase else version + 1).toString,
+        "frontierSource" -> carrySource.toString,
         "hostsFormat" -> (if (deltaMode) "delta" else "full"),
         "hostsBase" -> (if (deltaMode) prevHostsBase else version + 1).toString) ++
         (if (seenShards.isEmpty) Map.empty[String, String]
@@ -921,8 +923,17 @@ object CrawlEngine {
     else if (poolExhausted) Some(StopReason.NoResourcesAvailable)
     else None
 
+  private val CodegenIdInClassName = "spark.sql.codegen.useIdInClassName"
+
   /** Driver loop: resume from the latest committed snapshot (or bootstrap),
-    * then run rounds until no wait-state rows remain (or maxRounds). */
+    * then run rounds until no wait-state rows remain (or maxRounds).
+    *
+    * Rounds run with `spark.sql.codegen.useIdInClassName=false` (the
+    * caller's value is restored on return): generated class names then
+    * carry no AQE stage number, so identical whole-stage pipelines — the
+    * same merge/window/commit stages recur in several queries every round
+    * and in every round — hit the codegen cache instead of compiling one
+    * class per stage number. */
   def crawl(
       spark: SparkSession,
       store: SnapshotStore,
@@ -930,6 +941,22 @@ object CrawlEngine {
       seeds: Seq[(String, Int)],
       cfg: CrawlConfig,
       hooks: PipelineHooks = PipelineHooks()): CrawlSummary = {
+    val callerValue = spark.conf.getOption(CodegenIdInClassName)
+    spark.conf.set(CodegenIdInClassName, "false")
+    try crawlLoop(spark, store, corpus, seeds, cfg, hooks)
+    finally callerValue match {
+      case Some(x) => spark.conf.set(CodegenIdInClassName, x)
+      case None => spark.conf.unset(CodegenIdInClassName)
+    }
+  }
+
+  private def crawlLoop(
+      spark: SparkSession,
+      store: SnapshotStore,
+      corpus: DataFrame,
+      seeds: Seq[(String, Int)],
+      cfg: CrawlConfig,
+      hooks: PipelineHooks): CrawlSummary = {
     val corpusN =
       if (cfg.corpusStaging == "bucketed") corpusStagedBucketed(spark, corpus, store.baseDir)
       else corpusStaged(spark, corpus)

@@ -1,6 +1,7 @@
 package graft.round
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.core._
@@ -655,5 +656,82 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     written.foreach { case (id, s) =>
       assert(fin.get(id).flatten.contains(s), s"written-back source lost for id=$id")
     }
+  }
+
+  test("state tables on disk match the engine-owned read schemas (with and without write-back)") {
+    val corpus = CorpusTable.create(spark, spec)
+    val prodCfg = cfg.copy(maxRounds = 1, corpusStaging = "bucketed",
+      frontierLayout = "delta", seenFilter = true, seenShards = 4)
+    Seq(false, true).foreach { writeBack =>
+      val dir = tmpDir(s"schema-pin-$writeBack")
+      val hooks =
+        if (writeBack) PipelineHooks(parsedSinks = Seq(FrontierWriteBackSink)) else PipelineHooks()
+      val codegenIdKey = "spark.sql.codegen.useIdInClassName"
+      val callerCodegenId = spark.conf.getOption(codegenIdKey)
+      CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec),
+        prodCfg, hooks)
+      assert(spark.conf.getOption(codegenIdKey) == callerCodegenId, "crawl leaked its codegen setting")
+      val store = new SnapshotStore(dir, spark)
+      assert(store.latestVersion.contains(1) && store.readMeta(1)("frontierFormat") == "delta")
+      assert(store.readMeta(1)("frontierSource") == writeBack.toString)
+      // the union of every part file's footer schema, in column order
+      def footer(path: String) =
+        spark.read.option("mergeSchema", "true").parquet(path).schema
+      def pin(path: String, want: org.apache.spark.sql.types.StructType): Unit =
+        assert(footer(path) == want, s"$path footer ${footer(path).simpleString} != ${want.simpleString}")
+      pin(s"$dir/v=0/frontier", SnapshotStore.FrontierSchema)
+      pin(s"$dir/v=1/frontier", SnapshotStore.frontierSchema(writeBack))
+      Seq(0, 1).foreach { v =>
+        pin(s"$dir/v=$v/hosts", SnapshotStore.HostsSchema)
+        pin(s"$dir/v=$v/seen", SnapshotStore.SeenSchema)
+      }
+      pin(s"$dir/robots_rules", CrawlEngine.RobotsRulesSchema)
+    }
+  }
+
+  test("jobs per round do not grow with delta depth; no round opens a table with a schema job") {
+    val dir = tmpDir("job-budget")
+    val corpus = CorpusTable.create(spark, spec)
+    // compaction never fires: the round committing v=k+1 reads a merged
+    // view of delta depth k
+    val deepCfg = cfg.copy(maxRounds = 8, corpusStaging = "bucketed", frontierLayout = "delta",
+      frontierCompactEvery = 1000, seenFilter = true, seenShards = 4)
+    case class Job(timeMs: Long, callSite: String, inQuery: Boolean)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        // a job's stages are named after its call site ("parquet at X.scala:N")
+        jobs.add(Job(j.time, j.stageInfos.map(_.name).mkString(";"),
+          Option(j.properties).exists(_.getProperty("spark.sql.execution.id") != null)))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec), deepCfg)
+      org.apache.spark.GraftSparkAccess.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val store = new SnapshotStore(dir, spark)
+    val latest = store.latestVersion.get
+    assert(store.readMeta(latest)("frontierBase") == "0" && latest >= 6,
+      s"crawl reached v$latest; the budget needs delta depth >= 5")
+    def mtimeMs(v: Int) = Files.getLastModifiedTime(
+      java.nio.file.Paths.get(s"$dir/manifest-$v.json")).toMillis
+    val all = jobs.asScala.toSeq
+    // a schema-inference or file-listing job runs outside any SQL query;
+    // the commit's own parquet writes share the call site but run inside one
+    val metadataJobs = all.filter(j => j.callSite.contains("parquet at SnapshotStore") && !j.inQuery)
+    assert(metadataJobs.size == 0,
+      s"state-table metadata jobs at ${metadataJobs.map(_.callSite).distinct.mkString(", ")}")
+    // jobs of the round that committed version v: after manifest v-1, up
+    // to manifest v
+    val counts = (2 to latest).map { v =>
+      v -> all.count(j => j.timeMs > mtimeMs(v - 1) && j.timeMs <= mtimeMs(v))
+    }.toMap
+    info(s"jobs per committed version: ${counts.toSeq.sorted.mkString(", ")}")
+    // the depth-2 round (v=3) vs the deepest: a per-version read adds three
+    // jobs per level (frontier, hosts, seen), +15 from depth 2 to depth 7
+    val tolerance = 2
+    assert(counts(latest) <= counts(3) + tolerance,
+      s"jobs per committed version grew with delta depth: ${counts.toSeq.sorted}")
   }
 }
