@@ -84,7 +84,7 @@ object Bench {
     var r = 0
     while (r < rounds) {
       val rt0 = System.nanoTime()
-      CrawlEngine.runRound(spark, store, corpusN, rules, cfg, v, r, nPages + fetched) match {
+      CrawlEngine.runRound(spark, store, corpusN, rules, cfg, v, r, nPages + fetched, nPages) match {
         case Some(o) =>
           val sec = (System.nanoTime() - rt0) / 1e9
           fetched += o.selectedCount; v += 1
@@ -123,6 +123,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus.toInt * 4)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CrawlEngine.CodegenCacheMaxEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def t(name: String): DataFrame = spark.read.parquet(s"$sfDir/$name.parquet")

@@ -51,6 +51,7 @@ object ScalingBench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.local.dir", tmpBase)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", graft.round.CrawlEngine.CodegenCacheMaxEntries)
     // SPARK_GRAFT_AQE=0 → disable adaptive execution for this run.
     // AQE re-plans at every shuffle-stage boundary on the driver; with
     // ~12 shuffles per round that latency is a fixed per-round serial

@@ -23,6 +23,7 @@ object CrawlJob {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CrawlEngine.CodegenCacheMaxEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

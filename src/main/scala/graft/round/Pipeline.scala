@@ -102,6 +102,12 @@ object StopReason {
   * implementations may log, push metrics, or page. */
 trait CrawlNotifier {
   def onStop(reason: String, summary: CrawlEngine.CrawlSummary): Unit
+
+  /** A condition the crawl survives but an operator should see, such as
+    * seen-shard saturation and its compaction auto-resize. Called on the
+    * driver thread that runs the round, after the round commits; the
+    * same text also goes to stderr. */
+  def onWarning(message: String): Unit = ()
 }
 
 /** Everything pluggable a round consumes. `validator` is the B5 batch-item

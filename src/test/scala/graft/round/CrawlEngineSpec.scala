@@ -21,6 +21,12 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"graft-$tag").toString
 
+  /** The session's values of every key a round may set. */
+  private def roundSettingValues: Map[String, Option[String]] =
+    (CrawlEngine.roundSettings(interpreted = true).keySet ++
+      CrawlEngine.roundSettings(interpreted = false).keySet)
+      .map(k => k -> spark.conf.getOption(k)).toMap
+
   private lazy val simOut =
     ReferenceSimulator.run(CorpusGen.simCorpus(spec), CorpusGen.seeds(spec), cfg)
 
@@ -35,13 +41,18 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
       rows.map(t => t._3 -> t._5).toMap)
   }
 
-  test("engine crawl order matches the reference simulator exactly") {
-    val stateDir = tmpDir("order")
-    val corpus = CorpusTable.create(spark, spec)
-    val summary = CrawlEngine.crawl(spark, new SnapshotStore(stateDir, spark),
-      corpus, CorpusGen.seeds(spec), cfg)
-    assert(summary.fetches > 0)
+  /** The seeded crawl under `cfg` with the given execution mode (None: the
+    * engine's own rule). */
+  private def seededCrawl(interpreted: Option[Boolean]): (String, CrawlEngine.CrawlSummary) = {
+    val stateDir = tmpDir(s"seeded-${interpreted.getOrElse("rule")}")
+    val summary = CrawlEngine.forcedInterpreted.withValue(interpreted) {
+      CrawlEngine.crawl(spark, new SnapshotStore(stateDir, spark),
+        CorpusTable.create(spark, spec), CorpusGen.seeds(spec), cfg)
+    }
+    (stateDir, summary)
+  }
 
+  private def assertOrderMatchesSimulator(stateDir: String): Unit = {
     val (engineSeq, _) = engineFetches(stateDir)
     val simSeq = simOut.fetches.map(f => (f.round, f.seq, f.urlNorm, f.outcome))
     // compare with context on first divergence for debuggability
@@ -52,11 +63,7 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
         s"sizes=${engineSeq.size}/${simSeq.size}")
   }
 
-  test("extracted text is byte-identical to the corpus text column") {
-    val stateDir = tmpDir("text")
-    val corpus = CorpusTable.create(spark, spec)
-    CrawlEngine.crawl(spark, new SnapshotStore(stateDir, spark),
-      corpus, CorpusGen.seeds(spec), cfg)
+  private def assertTextMatchesCorpus(stateDir: String): Unit = {
     val (fetches, texts) = engineFetches(stateDir)
     val oracle = CorpusGen.simCorpus(spec)
     val successes = fetches.filter(_._4 == Outcome.Success)
@@ -66,17 +73,70 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("final frontier statuses match the simulator") {
-    val stateDir = tmpDir("frontier")
-    val corpus = CorpusTable.create(spark, spec)
-    CrawlEngine.crawl(spark, new SnapshotStore(stateDir, spark),
-      corpus, CorpusGen.seeds(spec), cfg)
+  private def assertFrontierMatchesSimulator(stateDir: String): Unit = {
     val store = new SnapshotStore(stateDir, spark)
     val engineFrontier = store.readFrontier(store.latestVersion.get)
       .select("urlNorm", "status", "attempt", "id")
       .collect().map(r => (r.getString(0), (r.getString(1), r.getInt(2), r.getLong(3)))).toMap
     val simFrontier = simOut.frontier.map(e => e.urlNorm -> ((e.status, e.attempt, e.id))).toMap
     assert(engineFrontier == simFrontier)
+  }
+
+  test("engine crawl order matches the reference simulator exactly") {
+    // the engine's own rule runs this small crawl interpreted
+    assert(CrawlEngine.interpretRound(simOut.frontier.size.toLong, CorpusGen.simCorpus(spec).size.toLong))
+    val (stateDir, summary) = seededCrawl(None)
+    assert(summary.fetches > 0)
+    assertOrderMatchesSimulator(stateDir)
+  }
+
+  test("extracted text is byte-identical to the corpus text column") {
+    assertTextMatchesCorpus(seededCrawl(None)._1)
+  }
+
+  test("final frontier statuses match the simulator") {
+    assertFrontierMatchesSimulator(seededCrawl(None)._1)
+  }
+
+  test("compiled rounds (forced) match the simulator too: order, text, final frontier") {
+    // the same parity through whole-stage codegen: the custom expressions'
+    // doGenCode (HtmlParseExpr text, UrlExpressions link resolution)
+    // instead of their interpreted eval
+    val (stateDir, summary) = seededCrawl(Some(false))
+    assert(summary.fetches > 0)
+    assertOrderMatchesSimulator(stateDir)
+    assertTextMatchesCorpus(stateDir)
+    assertFrontierMatchesSimulator(stateDir)
+  }
+
+  test("compiled rounds (forced) on bucketed + delta + seen + write-back match the simulator across a resume") {
+    // the configuration a large crawl runs compiled: bucketed staging, the
+    // delta layout (killed after round 4, resumed across a compaction
+    // boundary), the seen filter and the write-back sink
+    val stateDir = tmpDir("compiled-prod")
+    val corpus = CorpusTable.create(spark, spec)
+    val prodCfg = cfg.copy(corpusStaging = "bucketed", frontierLayout = "delta",
+      frontierCompactEvery = 3, seenFilter = true, seenShards = 4)
+    val hooks = PipelineHooks(parsedSinks = Seq(FrontierWriteBackSink))
+    CrawlEngine.forcedInterpreted.withValue(Some(false)) {
+      CrawlEngine.crawl(spark, new SnapshotStore(stateDir, spark),
+        corpus, CorpusGen.seeds(spec), prodCfg.copy(maxRounds = 4), hooks)
+      CrawlEngine.crawl(spark, new SnapshotStore(stateDir, spark),
+        corpus, CorpusGen.seeds(spec), prodCfg, hooks)
+    }
+    assertOrderMatchesSimulator(stateDir)
+    assertTextMatchesCorpus(stateDir)
+    assertFrontierMatchesSimulator(stateDir)
+    val store = new SnapshotStore(stateDir, spark)
+    val latest = store.latestVersion.get
+    assert((1 to latest).exists(v => store.readMeta(v).get("frontierFormat").contains("delta")),
+      "no delta commits")
+    // write-back: source = the simulator's extractedText of the row's success
+    val bySuccess = simOut.fetches.filter(_.outcome == Outcome.Success)
+      .map(f => f.id -> f.extractedText).toMap
+    val sources = store.readFrontier(latest).select("id", "source")
+      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    assert(sources == simOut.frontier.map(e => e.id -> bySuccess.get(e.id).flatten).toMap)
   }
 
   test("bloom seen-filter path yields the identical crawl (R7 exactness)") {
@@ -557,6 +617,111 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     assert(CrawlEngine.stopCheck(3, wallExpired = false, poolExhausted = false).isEmpty)
   }
 
+  test("execution mode: interpreted below the scanned-rows threshold, compiled at and above") {
+    val t = CrawlEngine.InterpretBelowRows
+    val w = CrawlEngine.CorpusRowsPerFrontierRow
+    assert(CrawlEngine.interpretRound(0L, 0L))
+    assert(CrawlEngine.interpretRound(t - 1, 0L))
+    assert(!CrawlEngine.interpretRound(t, 0L))
+    assert(!CrawlEngine.interpretRound(Long.MaxValue, 0L))
+    // w corpus rows weigh as much as one frontier row
+    assert(CrawlEngine.interpretRound(0L, w * t - 1))
+    assert(!CrawlEngine.interpretRound(0L, w * t))
+    assert(CrawlEngine.interpretRound(t / 2, w * (t / 2 - 1)))
+    assert(!CrawlEngine.interpretRound(t / 2, w * (t / 2)))
+    // a small frontier over a large corpus runs compiled
+    assert(!CrawlEngine.interpretRound(1000L, 10000000L))
+    // the two modes set disjoint keys; compiled keeps stage-free class names
+    assert(CrawlEngine.roundSettings(interpreted = true) == Map(
+      "spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    assert(CrawlEngine.roundSettings(interpreted = false) ==
+      Map("spark.sql.codegen.useIdInClassName" -> "false"))
+  }
+
+  test("an interpreted round compiles no class; caller settings return after a round and a throw") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = tmpDir("exec-mode")
+    val corpus = CorpusTable.create(spark, spec)
+    val prodCfg = cfg.copy(corpusStaging = "bucketed", frontierLayout = "delta",
+      seenFilter = true, seenShards = 4)
+    // state to run rounds on. Its interpreted rounds also cache the few
+    // literal-free classes Spark generates in every mode (cache-scan
+    // iterators, row joiners, range-partition orderings); later rounds
+    // find them cached.
+    CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec),
+      prodCfg.copy(maxRounds = 2))
+    val store = new SnapshotStore(dir, spark)
+    val corpusN = CrawlEngine.corpusStagedBucketed(spark, corpus, dir)
+    val rules = CrawlEngine.stagedRobotsRules(spark, dir).flatten
+    val corpusRows = corpus.count()
+    def nextRound(hooks: PipelineHooks = PipelineHooks(),
+                  rows: Long = corpusRows): Option[CrawlEngine.RoundOutcome] = {
+      val v = store.latestVersion.get
+      val meta = store.readMeta(v)
+      assert(CrawlEngine.interpretRound(meta("nextId").toLong, corpusRows), "state outgrew the threshold")
+      // a tick past every politeness gap, so the round has work
+      CrawlEngine.runRound(spark, store, corpusN, rules, prodCfg, v,
+        meta("nextRound").toInt + 100, meta("nextId").toLong, rows, hooks)
+    }
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val original = roundSettingValues
+    try {
+      // caller values that differ from both modes' settings
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+      spark.conf.set("spark.sql.codegen.useIdInClassName", "true")
+      val caller = roundSettingValues
+
+      val c0 = compiles
+      assert(nextRound().isDefined)
+      // factoryMode is an internal Spark conf: if an upgrade drops it, the
+      // round compiles again and this fails
+      assert(compiles - c0 == 0, s"an interpreted round compiled ${compiles - c0} classes")
+      assert(roundSettingValues == caller)
+
+      // the counter is live: the same frontier over a corpus too large to
+      // interpret runs compiled (the corpus size only picks the mode)
+      val c1 = compiles
+      assert(nextRound(rows = CrawlEngine.CorpusRowsPerFrontierRow * CrawlEngine.InterpretBelowRows).isDefined)
+      assert(compiles - c1 > 0, "a round over a large corpus compiled nothing")
+      assert(roundSettingValues == caller)
+
+      val failingSink = PipelineHooks(rawSinks = Seq(new RawSink {
+        override def write(raw: org.apache.spark.sql.DataFrame, version: Int): Unit =
+          throw new IllegalStateException("raw sink down")
+      }))
+      Seq(true, false).foreach { interpreted =>
+        val ex = intercept[IllegalStateException](
+          CrawlEngine.forcedInterpreted.withValue(Some(interpreted))(nextRound(failingSink)))
+        assert(ex.getMessage == "raw sink down")
+        assert(roundSettingValues == caller, s"a throwing round (interpreted=$interpreted) leaked its settings")
+      }
+    } finally original.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("seen-shard saturation and its auto-resize reach CrawlNotifier.onWarning") {
+    val dir = tmpDir("warn")
+    val corpus = CorpusTable.create(spark, spec)
+    val warnings = scala.collection.mutable.Buffer.empty[String]
+    val hooks = PipelineHooks(notifiers = Seq(
+      new CrawlNotifier {
+        override def onStop(reason: String, s: CrawlEngine.CrawlSummary): Unit = ()
+        override def onWarning(message: String): Unit = warnings += message
+      }))
+    // capacity 4 a shard under the full layout (every seen write is full,
+    // so every round checks saturation): the first commit must resize
+    CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec),
+      cfg.copy(seenFilter = true, seenShards = 4, seenExpectedPerShard = 4L, maxRounds = 1), hooks)
+    val store = new SnapshotStore(dir, spark)
+    val resizedTo = store.readMeta(1)("seenExpectedPerShard").toLong
+    assert(resizedTo > 4L, "the round did not auto-resize")
+    assert(warnings.exists(w => w.contains("auto-resize") && w.contains(s"expectedPerShard=$resizedTo")),
+      s"no auto-resize warning reached the notifier: $warnings")
+  }
+
   test("re-register after driver restart keeps the stage-time bucket count") {
     import spark.implicits._
     val pq = tmpDir("buckets-src")
@@ -666,11 +831,10 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
       val dir = tmpDir(s"schema-pin-$writeBack")
       val hooks =
         if (writeBack) PipelineHooks(parsedSinks = Seq(FrontierWriteBackSink)) else PipelineHooks()
-      val codegenIdKey = "spark.sql.codegen.useIdInClassName"
-      val callerCodegenId = spark.conf.getOption(codegenIdKey)
+      val callerSettings = roundSettingValues
       CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec),
         prodCfg, hooks)
-      assert(spark.conf.getOption(codegenIdKey) == callerCodegenId, "crawl leaked its codegen setting")
+      assert(roundSettingValues == callerSettings, "crawl leaked a round setting")
       val store = new SnapshotStore(dir, spark)
       assert(store.latestVersion.contains(1) && store.readMeta(1)("frontierFormat") == "delta")
       assert(store.readMeta(1)("frontierSource") == writeBack.toString)
