@@ -71,11 +71,7 @@ object Bench {
       store.writeSeen(0, graft.seen.BloomShards.buildDf(
         frontier0.select("urlNorm"), "urlNorm", cfg.seenShards,
         cfg.seenExpectedPerShard, cfg.seenFpp))
-    store.commit(0, frontier0, hosts0, None,
-      Map("nextRound" -> "0", "nextId" -> nPages.toString) ++
-        (if (!seenFilter) Map.empty[String, String]
-         else Map("seenFormat" -> "full", "seenBase" -> "0",
-           "seenShards" -> cfg.seenShards.toString)))
+    store.commit(0, frontier0, hosts0, None, CrawlEngine.bootstrapMeta(nPages, cfg))
     val rules: Option[org.apache.spark.sql.DataFrame] = None // bench corpus serves no robots.txt
     onBootstrapDone()
     val out = Vector.newBuilder[(Long, Double)]

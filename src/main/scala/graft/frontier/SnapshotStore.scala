@@ -20,6 +20,8 @@ import org.apache.spark.sql.types._
   *   results/v=K/                                    (append-only history)
   *   manifest-K.json                                 (atomic commit marker)
   * }}}
+  * Fetch records have this one layout; [[allResults]] reads the committed
+  * `results/v=K/` dirs back as one partitioned scan.
   *
   * A version K is committed iff `manifest-K.json` exists; the manifest is
   * written via temp-file + ATOMIC_MOVE rename (write-audit-publish), which
@@ -45,8 +47,8 @@ import org.apache.spark.sql.types._
   * [[SnapshotStore.SeenSchema]]) instead of inferring it from footers:
   * opening a state table launches no Spark job at any delta depth, and the
   * plan is the same at every depth (so its generated code is too). A
-  * column a version's files lack (the optional `source`, `inserts`) reads
-  * as null. Whether the frontier carries `source` is a manifest key
+  * column a version's files lack (the optional `source`) reads as null.
+  * Whether the frontier carries `source` is a manifest key
   * (`frontierSource`), never inferred from the files.
   *
   * The manifest carries the driver-side scalars (round, nextId, counters,
@@ -78,13 +80,13 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
       hosts: DataFrame,
       results: Option[DataFrame],
       metaLazy: => Map[String, String],
-      // additional write units to run CONCURRENTLY with the table writes
-      // and await before the manifest seals (the engine passes the seen-
-      // shard update here so its cogroup job overlaps the frontier/hosts/
-      // results writes instead of serializing in front of them). Await
-      // gives the happens-before edge, so `metaLazy` may read state the
-      // units produced (e.g. the seen-saturation counters).
-      concurrent: Seq[() => Unit] = Nil): Unit = {
+      // one more write unit to run CONCURRENTLY with the table writes and
+      // await before the manifest seals (the engine passes the seen-shard
+      // update here so its cogroup job overlaps the frontier/hosts/results
+      // writes instead of serializing in front of them). Await gives the
+      // happens-before edge, so `metaLazy` may read state the unit
+      // produced (e.g. the seen-saturation counters).
+      concurrent: Option[() => Unit] = None): Unit = {
     // write-audit-publish: data first (overwrite any orphan), manifest last.
     // `metaLazy` is by-name: evaluated only after the data writes, so it can
     // read Observation metrics collected during the frontier write.
@@ -182,49 +184,27 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
   def writeSeen(v: Int, seen: DataFrame): Unit =
     seen.write.mode("overwrite").parquet(dir(v, "seen"))
   def hasSeen(v: Int): Boolean =
-    Files.exists(Paths.get(dir(v, "seen"))) ||
-      (Files.exists(manifestPath(v)) && readMeta(v).contains("seenFormat"))
+    Files.exists(manifestPath(v)) && readMeta(v).contains("seenFormat")
   def readSeen(v: Int): DataFrame = {
     val meta = if (Files.exists(manifestPath(v))) readMeta(v) else Map.empty[String, String]
     readTable("seen", SnapshotStore.SeenSchema, "shard", deltaBase(meta, "seen"), v)
   }
 
   def hasResults(v: Int): Boolean = readMeta(v).get("hasResults").contains("true")
-  /** One round's fetch records. Reads the appendable layout first, falling
-    * back to the pre-round-3 per-version location. */
-  def readResults(v: Int): DataFrame =
-    if (Files.exists(Paths.get(resultsDir(v)))) spark.read.parquet(resultsDir(v))
-    else spark.read.parquet(dir(v, "results"))
-
   /** All fetch records from committed snapshots ≤ latest, i.e. the crawl
-    * history. New-layout versions come from ONE partitioned scan of
-    * `results/` with partition pruning `v <= latest` (orphan uncommitted
-    * dirs are always > latest, so the predicate excludes them by
-    * construction); only legacy per-version dirs (pre-round-3 stores) pay
-    * a per-version union. Plan size is O(1) in versions for stores written
-    * by this code. */
+    * history: ONE partitioned scan of the committed `results/v=K` dirs, so
+    * the plan is O(1) in versions. */
   def allResults(): Option[DataFrame] = latestVersion.flatMap { latest =>
-    import org.apache.spark.sql.functions._
     val vs = (0 to latest).filter(v => Files.exists(manifestPath(v)) && hasResults(v))
-    val (newVs, oldVs) = vs.partition(v => Files.exists(Paths.get(resultsDir(v))))
     // list ONLY the committed partition dirs (basePath keeps `v` a
-    // partition column and the plan a single pruned scan): reading the
-    // root would let parquet schema inference sample a part file from a
-    // crash-orphaned results/v=latest+1 dir BEFORE the v<=latest filter
-    // prunes its rows — a truncated file there broke allResults until
-    // manually cleaned (round-3 ADVICE)
-    val newDf =
-      if (newVs.isEmpty) None
-      else Some(spark.read.option("basePath", resultsRoot)
-        .parquet(newVs.map(resultsDir): _*)
-        .drop("v"))
-    val oldDf =
-      if (oldVs.isEmpty) None
-      else Some(oldVs.map(v => spark.read.parquet(dir(v, "results"))).reduce(_ unionByName _))
-    (newDf, oldDf) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
+    // partition column and the plan a single scan): reading the root would
+    // let parquet schema inference sample a part file from a crash-orphaned
+    // results/v=latest+1 dir — a truncated file there broke allResults
+    // until manually cleaned (round-3 ADVICE)
+    if (vs.isEmpty) None
+    else Some(spark.read.option("basePath", resultsRoot)
+      .parquet(vs.map(resultsDir): _*)
+      .drop("v"))
   }
 }
 

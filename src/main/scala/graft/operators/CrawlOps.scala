@@ -71,15 +71,17 @@ object CrawlOps {
       .orderBy(col("user_id"))
 
   /** R7 — the same anti-join computed through the sharded-bloom pre-filter
-    * + exact confirm path (BloomShards). Result is IDENTICAL to
-    * [[seenAntiJoin]] by construction — that identity is the oracle. */
-  def seenBloomProbe(events: DataFrame, customer: DataFrame): DataFrame =
-    BloomShards.notSeen(
-        events.withColumnRenamed("user_id", "c_custkey"),
-        seenUsers(customer), "c_custkey", nShards = 8)
+    * + exact confirm path the engine's link discovery runs
+    * ([[BloomShards.notSeen]]). Result is IDENTICAL to [[seenAntiJoin]] by
+    * construction — that identity is the oracle. */
+  def seenBloomProbe(events: DataFrame, customer: DataFrame): DataFrame = {
+    val seen = seenUsers(customer)
+    BloomShards.notSeen(events.withColumnRenamed("user_id", "c_custkey"), seen, "c_custkey",
+        BloomShards.buildDf(seen, "c_custkey", 8), 8)
       .groupBy(col("c_custkey").as("user_id"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("user_id"))
+  }
 
   /** C3/R3 — duplicate kill keeping the max id per duplicate key
     * (`SqlQueueTaskProvider.scala:73-77` keeps max id among waits). */

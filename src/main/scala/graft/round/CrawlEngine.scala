@@ -298,18 +298,23 @@ object CrawlEngine {
     else graft.frontier.SnapshotStore.parseFlat(java.nio.file.Files.readString(markerPath))
   }
 
-  /** Snapshot schema back-compat (round-2 ADVICE): frontiers written before
-    * the multi-project round lack projectId/taskType — the fixed-schema
-    * read yields them as null, and this backfills the configured defaults
-    * so resume works. New commits stamp `schemaVersion` so future
-    * incompatibilities can fail with a clear message instead. */
-  private[graft] def frontierCompat(df: DataFrame, cfg: CrawlConfig): DataFrame =
-    df.withColumn("projectId", coalesce(col("projectId"), lit(cfg.projects.head.projectId)))
-      .withColumn("taskType", coalesce(col("taskType"), lit(cfg.projects.head.taskType)))
+  /** The state-dir schema every manifest this code commits carries as
+    * `schemaVersion`. [[runRound]] refuses to resume from a manifest with
+    * any other value: "4" is the first version whose frontier always has
+    * projectId/taskType, hosts always failCount, seen shards always
+    * `inserts`, and whose manifests always carry every table's format and
+    * base plus `frontierSource`. */
+  val SchemaVersion = "4"
 
-  /** Hosts-table back-compat: pre-D3 snapshots lack failCount (read as null). */
-  private[graft] def hostsCompat(df: DataFrame): DataFrame =
-    df.withColumn("failCount", coalesce(col("failCount"), lit(0)))
+  /** The v0 manifest of a bootstrap commit: full tables, no `source`
+    * column, seen shards iff `cfg.seenFilter`. */
+  def bootstrapMeta(nextId: Long, cfg: CrawlConfig): Map[String, String] =
+    Map("nextRound" -> "0", "nextId" -> nextId.toString, "schemaVersion" -> SchemaVersion,
+      "frontierFormat" -> "full", "frontierBase" -> "0", "frontierSource" -> "false",
+      "hostsFormat" -> "full", "hostsBase" -> "0") ++
+      (if (!cfg.seenFilter) Map.empty[String, String]
+       else Map("seenFormat" -> "full", "seenBase" -> "0",
+         "seenShards" -> cfg.seenShards.toString))
 
   /** Bootstrap snapshot v=0 from a seed list. */
   def bootstrap(
@@ -352,14 +357,7 @@ object CrawlEngine {
         rows.map(_._3).toDF("urlNorm"), "urlNorm", cfg.seenShards)
       store.writeSeen(0, seen0)
     }
-    store.commit(0, frontier0, hosts0, None,
-      Map("nextRound" -> "0", "nextId" -> rows.size.toString,
-        "schemaVersion" -> "3",
-        "frontierFormat" -> "full", "frontierBase" -> "0", "frontierSource" -> "false",
-        "hostsFormat" -> "full", "hostsBase" -> "0") ++
-        (if (!cfg.seenFilter) Map.empty[String, String]
-         else Map("seenFormat" -> "full", "seenBase" -> "0",
-           "seenShards" -> cfg.seenShards.toString)))
+    store.commit(0, frontier0, hosts0, None, bootstrapMeta(rows.size, cfg))
   }
 
   final case class RoundOutcome(selectedCount: Long, newLinkCount: Long, waitsRemaining: Long)
@@ -532,6 +530,10 @@ object CrawlEngine {
       // crawl restores (`TorResourceController.scala:59-60,86-96`).
       resourceFails: Map[String, Long] = Map.empty): Option[RoundOutcome] = {
     val meta0 = store.readMeta(version)
+    require(meta0.get("schemaVersion").contains(SchemaVersion),
+      s"state dir ${store.baseDir} v=$version has schemaVersion " +
+        s"${meta0.getOrElse("schemaVersion", "(none)")}, this engine reads only " +
+        s"schemaVersion $SchemaVersion — start a new state dir")
     val interpreted =
       forcedInterpreted.value.getOrElse(interpretRound(meta0("nextId").toLong, corpusRows))
     val restoreSettings = applyRoundSettings(spark, interpreted)
@@ -543,11 +545,8 @@ object CrawlEngine {
       // `source` column inside the same commit (see the sink's doc)
       val writeBack = hooks.parsedSinks.contains(FrontierWriteBackSink)
 
-      // pre-round-3 snapshots lack projectId/taskType (frontier) and
-      // failCount (hosts): the fixed-schema read yields nulls there, and the
-      // compat projections backfill the defaults (round-2 ADVICE)
-      val frontier = frontierCompat(store.readFrontier(version), cfg)
-      val hosts = hostsCompat(store.readHosts(version))
+      val frontier = store.readFrontier(version)
+      val hosts = store.readHosts(version)
       // a snapshot written WITH the write-back sink carries a `source` column;
       // resuming it without the sink must not drop previously written-back
       // text on the next full rewrite (round-4 ADVICE #3) — carry the column
@@ -562,9 +561,6 @@ object CrawlEngine {
       // work, never ∝ total state size (round-2 scale-killers A+B).
       val deltaMode = cfg.frontierLayout == "delta" &&
         (version + 1) % math.max(cfg.frontierCompactEvery, 1) != 0
-      val prevBase = meta0.get("frontierBase").map(_.toInt).getOrElse(version)
-      val prevHostsBase = meta0.get("hostsBase").map(_.toInt).getOrElse(version)
-      val prevSeenBase = meta0.get("seenBase").map(_.toInt).getOrElse(version)
       // lease multiplexing: one seeded-pick task type per round — the
       // deterministic twin of the master's random pick among registered
       // types (`QueueTaskServiceImpl.scala:32-55`)
@@ -708,10 +704,7 @@ object CrawlEngine {
         // seenShards smaller than the snapshot's would route keys to the
         // WRONG filter — bloom false negatives, and "sure-new" rows bypass
         // the exact anti-join, so seen URLs re-enter with duplicate ids.
-        // The shard count comes from the manifest (round-3+ snapshots) or a
-        // cheap count of the tiny shard table (older ones).
-        val persistedShards = meta0.get("seenShards").map(_.toInt)
-          .getOrElse(store.readSeen(version).count().toInt)
+        val persistedShards = meta0("seenShards").toInt
         require(persistedShards == cfg.seenShards,
           s"snapshot seen set has $persistedShards shards but cfg.seenShards=" +
             s"${cfg.seenShards} — resuming would corrupt the URL-seen membership")
@@ -720,7 +713,8 @@ object CrawlEngine {
         if (!cfg.seenFilter) None
         else Some(
           if (seenOnDisk) store.readSeen(version)
-          else // resumed from a pre-filter snapshot: rebuild from frontier
+          else // the previous round ran without the seen filter (a resume
+            // that turns it on): build the shards from the frontier
             graft.seen.BloomShards.buildDf(frontier.select("urlNorm"), "urlNorm",
               cfg.seenShards, cfg.seenExpectedPerShard, cfg.seenFpp))
       // (anti-joins hinted shuffle_hash for the same no-re-sort reason)
@@ -729,15 +723,7 @@ object CrawlEngine {
         case None =>
           candidates.join(seenSet, Seq("newNorm"), "left_anti")
         case Some(shardsDf) =>
-          val flags = graft.seen.BloomShards
-            .probeFlagsDf(candidates.select(col("newNorm")), "newNorm", shardsDf, cfg.seenShards)
-            .withColumnRenamed("maybe", "__maybe")
-          // candidates' newNorm is unique (rn=1 window) so this join is 1:1
-          val flagged = candidates.join(flags, Seq("newNorm"), "left")
-          val sure = flagged.filter(not(coalesce(col("__maybe"), lit(false)))).drop("__maybe")
-          val confirmed = flagged.filter(coalesce(col("__maybe"), lit(false))).drop("__maybe")
-            .join(seenSet, Seq("newNorm"), "left_anti")
-          sure.unionByName(confirmed)
+          graft.seen.BloomShards.notSeen(candidates, seenSet, "newNorm", shardsDf, cfg.seenShards)
       }
       // id assignment in exact (seq, pos) discovery order — distributed rank,
       // same mechanism as the R2 cut
@@ -921,11 +907,7 @@ object CrawlEngine {
           else graft.seen.BloomShards.updateDf(shardsDf, newKeys, "urlNorm", cfg.seenShards)
         timed("seen-update")(store.writeSeen(version + 1, seen2))
         if (!seenDelta) {
-          val maxIns = store.readSeen(version + 1)
-            .agg(max(coalesce(col("inserts"), lit(0L)))).head() match {
-              case r if r.isNullAt(0) => 0L
-              case r => r.getLong(0)
-            }
+          val maxIns = store.readSeen(version + 1).agg(max(col("inserts"))).head().getLong(0)
           var ratio = maxIns.toDouble / math.max(effCapacity, 1L)
           if (ratio >= 1.0) {
             // auto-resize at the compaction point: rebuild every shard from
@@ -985,16 +967,16 @@ object CrawlEngine {
           "nextId" -> (nextId + obsLong("newLinks", 0L)).toString,
           "selected" -> selectedCount.toString,
           "newLinks" -> obsLong("newLinks", 0L).toString,
-          "schemaVersion" -> "3",
+          "schemaVersion" -> SchemaVersion,
           "frontierFormat" -> (if (deltaMode) "delta" else "full"),
-          "frontierBase" -> (if (deltaMode) prevBase else version + 1).toString,
+          "frontierBase" -> (if (deltaMode) meta0("frontierBase") else (version + 1).toString),
           "frontierSource" -> carrySource.toString,
           "hostsFormat" -> (if (deltaMode) "delta" else "full"),
-          "hostsBase" -> (if (deltaMode) prevHostsBase else version + 1).toString) ++
+          "hostsBase" -> (if (deltaMode) meta0("hostsBase") else (version + 1).toString)) ++
           (if (seenShards.isEmpty) Map.empty[String, String]
            else Map(
              "seenFormat" -> (if (seenDelta) "delta" else "full"),
-             "seenBase" -> (if (seenDelta) prevSeenBase else version + 1).toString,
+             "seenBase" -> (if (seenDelta) meta0("seenBase") else (version + 1).toString),
              "seenShards" -> cfg.seenShards.toString,
              // effective per-shard capacity (auto-resize persists its pick)
              "seenExpectedPerShard" -> seenCapacityOut.toString)) ++
@@ -1002,7 +984,7 @@ object CrawlEngine {
             Map("seenMaxShardInserts" -> ins.toString,
               "seenFillRatio" -> f"$ratio%.4f")
           } ++ resourceMeta ++ outcomeCounts
-      }, concurrent = seenWriteUnit.toSeq))
+      }, concurrent = seenWriteUnit))
       seenWarning.foreach { w =>
         System.err.println(w)
         hooks.notifiers.foreach(_.onWarning(w))

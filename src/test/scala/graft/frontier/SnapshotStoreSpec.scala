@@ -66,7 +66,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
     val slowUnit = () => { Thread.sleep(3000); finished.set(true) }
     val ex = intercept[Exception] {
       store.commit(0, df2(Seq(1L -> "a")), badHosts, None,
-        Map("nextRound" -> "0", "nextId" -> "1"), concurrent = Seq(slowUnit))
+        Map("nextRound" -> "0", "nextId" -> "1"), concurrent = Some(slowUnit))
     }
     assert(finished.get(), s"commit rethrew ($ex) while a sibling write was still running")
     assert(!Files.exists(Paths.get(s"$dir/manifest-0.json")), "a failed commit published")
@@ -92,7 +92,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
       hosts((0 until 3).map(i => s"h$i" -> 0L)), None,
       base ++ Map("frontierFormat" -> "full", "frontierBase" -> "0",
         "hostsFormat" -> "full", "hostsBase" -> "0", "seenFormat" -> "full", "seenBase" -> "0"),
-      concurrent = Seq(() => store.writeSeen(0,
+      concurrent = Some(() => store.writeSeen(0,
         (0 until 4).map(i => (i, Array[Byte](0))).toDF("shard", "bytes"))))
     (1 to depth).foreach { k =>
       store.commit(k,
@@ -101,7 +101,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
         hosts(Seq(s"h${k % 3}" -> k.toLong)), None,
         base ++ Map("frontierFormat" -> "delta", "frontierBase" -> "0",
           "hostsFormat" -> "delta", "hostsBase" -> "0", "seenFormat" -> "delta", "seenBase" -> "0"),
-        concurrent = Seq(() => store.writeSeen(k,
+        concurrent = Some(() => store.writeSeen(k,
           Seq((k % 4, Array[Byte](k.toByte), k.toLong)).toDF("shard", "bytes", "inserts"))))
     }
     store

@@ -140,20 +140,30 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("bloom seen-filter path yields the identical crawl (R7 exactness)") {
-    val plain = tmpDir("plain"); val bloom = tmpDir("bloom")
+    val plain = tmpDir("plain"); val bloom = tmpDir("bloom"); val late = tmpDir("bloom-late")
     val corpus = CorpusTable.create(spark, spec)
     CrawlEngine.crawl(spark, new SnapshotStore(plain, spark), corpus, CorpusGen.seeds(spec), cfg)
     val bloomCfg = cfg.copy(seenFilter = true, seenShards = 4)
-    // interrupt + resume to exercise shard persistence too
-    CrawlEngine.crawl(spark, new SnapshotStore(bloom, spark),
-      corpus, CorpusGen.seeds(spec), bloomCfg.copy(maxRounds = 4))
-    CrawlEngine.crawl(spark, new SnapshotStore(bloom, spark),
-      corpus, CorpusGen.seeds(spec), bloomCfg)
+    // interrupt + resume to exercise shard persistence too; in `late` the
+    // first leg runs without the filter, so the resume builds the shards
+    // from the frontier
+    Seq(bloom -> bloomCfg, late -> cfg).foreach { case (dir, firstLeg) =>
+      CrawlEngine.crawl(spark, new SnapshotStore(dir, spark),
+        corpus, CorpusGen.seeds(spec), firstLeg.copy(maxRounds = 4))
+      CrawlEngine.crawl(spark, new SnapshotStore(dir, spark),
+        corpus, CorpusGen.seeds(spec), bloomCfg)
+    }
     val (a, _) = engineFetches(plain)
-    val (b, _) = engineFetches(bloom)
-    assert(a == b)
-    assert(new SnapshotStore(bloom, spark).hasSeen(
-      new SnapshotStore(bloom, spark).latestVersion.get))
+    Seq(bloom, late).foreach { dir =>
+      assert(engineFetches(dir)._1 == a, s"$dir differs from the crawl without the filter")
+      val store = new SnapshotStore(dir, spark)
+      assert(store.hasSeen(store.latestVersion.get))
+    }
+    val lateStore = new SnapshotStore(late, spark)
+    val firstSeen = (0 to lateStore.latestVersion.get).filter(lateStore.hasSeen)
+    assert(firstSeen.headOption.exists(_ > 1) &&
+      lateStore.readMeta(firstSeen.head)("seenFormat") == "full",
+      s"versions with seen shards: $firstSeen")
   }
 
   test("bucketed on-disk corpus staging yields the identical crawl (no corpus cache)") {
@@ -299,29 +309,29 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     assert(stagedB.count() == cbExpected, "stale staged corpus served on reuse")
   }
 
-  test("pre-multiproject snapshot schema resumes via backfill (schema compat)") {
-    val full = tmpDir("compat-full"); val old = tmpDir("compat-old")
+  test("a state dir of another schemaVersion is refused before the round touches it") {
     val corpus = CorpusTable.create(spark, spec)
-    CrawlEngine.crawl(spark, new SnapshotStore(full, spark), corpus, CorpusGen.seeds(spec), cfg)
-    CrawlEngine.crawl(spark, new SnapshotStore(old, spark),
-      corpus, CorpusGen.seeds(spec), cfg.copy(maxRounds = 3))
-    // rewrite the latest snapshot in the round-1-era schema (no projectId/
-    // taskType on the frontier, no failCount on hosts) — materialize to the
-    // driver first so the overwrite doesn't race the lazy read
-    val store = new SnapshotStore(old, spark)
-    val v = store.latestVersion.get
-    def rewrite(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
-      val rows = df.collect().toSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows), df.schema)
-        .write.mode("overwrite").parquet(path)
+    // an older version, and a manifest without the key
+    Seq(Some("3"), None).foreach { schemaVersion =>
+      val dir = tmpDir(s"schema-${schemaVersion.getOrElse("none")}")
+      CrawlEngine.crawl(spark, new SnapshotStore(dir, spark),
+        corpus, CorpusGen.seeds(spec), cfg.copy(maxRounds = 1))
+      val latest = new SnapshotStore(dir, spark).latestVersion.get
+      assert(latest == 1)
+      val manifest = java.nio.file.Paths.get(s"$dir/manifest-$latest.json")
+      val meta = SnapshotStore.parseFlat(Files.readString(manifest))
+      assert(meta("schemaVersion") == CrawlEngine.SchemaVersion)
+      Files.writeString(manifest, SnapshotStore.writeFlat(
+        schemaVersion.fold(meta - "schemaVersion")(sv => meta + ("schemaVersion" -> sv))))
+      val ex = intercept[IllegalArgumentException] {
+        CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec), cfg)
+      }
+      assert(ex.getMessage.contains("schemaVersion") && ex.getMessage.contains("new state dir"),
+        ex.getMessage)
+      assert(new SnapshotStore(dir, spark).latestVersion.contains(latest))
+      assert(!Files.exists(java.nio.file.Paths.get(s"$dir/v=${latest + 1}")),
+        "the refused round wrote state")
     }
-    rewrite(store.readFrontier(v).drop("projectId", "taskType"), s"$old/v=$v/frontier")
-    rewrite(store.readHosts(v).drop("failCount"), s"$old/v=$v/hosts")
-    // resume must backfill the defaults and produce the identical crawl
-    CrawlEngine.crawl(spark, new SnapshotStore(old, spark), corpus, CorpusGen.seeds(spec), cfg)
-    val (x, _) = engineFetches(full)
-    val (y, _) = engineFetches(old)
-    assert(x == y)
   }
 
   test("multi-project taskType multiplexing: engine matches simulator, links chain projects") {

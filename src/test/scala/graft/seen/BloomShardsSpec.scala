@@ -9,43 +9,49 @@ class BloomShardsSpec extends AnyFunSuite with SparkSpec {
   test("no false negatives: every inserted key probes true") {
     import spark.implicits._
     val keys = (0 until 5000).map(i => s"https://host${i % 37}.example/p$i")
-    val df = keys.toDF("k")
-    val shards = BloomShards.build(df, "k", nShards = 8, expectedPerShard = 2048)
-    assert(keys.forall(shards.mightContain), "bloom false negative")
+    val shardsDf = BloomShards.buildDf(keys.toDF("k"), "k", 8, expectedPerShard = 2048)
+    val flags = BloomShards.probeFlagsDf(keys.toDF("k"), "k", shardsDf, 8)
+      .as[(String, Boolean)].collect().toMap
+    assert(flags.size == keys.size)
+    assert(keys.forall(flags), "bloom false negative")
   }
 
   test("notSeen equals exact anti-join") {
     import spark.implicits._
-    val seen = (0 until 3000).map(i => s"u$i").toDF("k")
-    val candidates = (1500 until 4500).map(i => s"u$i").toDF("k")
-    val viaBloom = BloomShards.notSeen(candidates, seen, "k", nShards = 4)
-      .as[String].collect().sorted
-    val exact = candidates.join(seen, Seq("k"), "left_anti")
-      .as[String].collect().sorted
-    assert(viaBloom.toSeq == exact.toSeq)
-    assert(exact.length == 1500)
+    // string keys, and bigint keys with repeats (the seen_bloom_probe
+    // oracle's c_custkey): probes key on the string form, so the flags
+    // must join back onto the bigint candidates, once per distinct key
+    val inputs = Seq(
+      ((0 until 3000).map(i => s"u$i").toDF("k"),
+        (1500 until 4500).map(i => s"u$i").toDF("k"), 1500L),
+      ((0L until 3000L).toDF("k"),
+        (1500L until 4500L).flatMap(i => Seq.fill((i % 3).toInt + 1)(i -> s"row$i")).toDF("k", "v"),
+        (3000L until 4500L).map(_ % 3 + 1).sum))
+    inputs.foreach { case (seen, candidates, nNew) =>
+      val shards = BloomShards.buildDf(seen, "k", 4)
+      val viaBloom = BloomShards.notSeen(candidates, seen, "k", shards, 4)
+      assert(viaBloom.schema == candidates.schema)
+      val exact = candidates.join(seen, Seq("k"), "left_anti")
+      assert(viaBloom.collect().map(_.toString).sorted.toSeq ==
+        exact.collect().map(_.toString).sorted.toSeq)
+      assert(exact.count() == nNew)
+    }
   }
 
   test("distributed shard lifecycle: build/update/probe with no driver-side bytes") {
     import spark.implicits._
     val n = 8
-    val seen = (0 until 3000).map(i => s"u$i").toDF("k")
-    val shardsDf = BloomShards.buildDf(seen, "k", n, expectedPerShard = 1024)
+    val keys = (0 until 3000).map(i => s"u$i")
+    val shardsDf = BloomShards.buildDf(keys.toDF("k"), "k", n, expectedPerShard = 1024)
     assert(shardsDf.count() == n)
     // no false negatives through the cogroup probe
-    val probeAll = BloomShards.probeFlagsDf(seen, "k", shardsDf, n)
+    val probeAll = BloomShards.probeFlagsDf(keys.toDF("k"), "k", shardsDf, n)
     assert(probeAll.filter(not(col("maybe"))).count() == 0, "distributed bloom false negative")
     // incremental update keeps old + new members
-    val shards2 = BloomShards.updateDf(shardsDf, (3000 until 3500).map(i => s"u$i").toDF("k"), "k", n)
-    val all = (0 until 3500).map(i => s"u$i").toDF("k")
-    assert(BloomShards.probeFlagsDf(all, "k", shards2, n)
+    val more = (0 until 500).map(i => s"new$i")
+    val shards2 = BloomShards.updateDf(shardsDf, more.toDF("k"), "k", n)
+    assert(BloomShards.probeFlagsDf((keys ++ more).toDF("k"), "k", shards2, n)
       .filter(not(col("maybe"))).count() == 0)
-    // parity with the driver-side path on the same input
-    val driverShards = BloomShards.build(seen, "k", n, expectedPerShard = 1024)
-    val probes = (0 until 6000 by 7).map(i => s"u$i")
-    val distFlags = BloomShards.probeFlagsDf(probes.toDF("k"), "k", shardsDf, n)
-      .as[(String, Boolean)].collect().toMap
-    probes.foreach(k => assert(distFlags(k) == driverShards.mightContain(k), s"mismatch for $k"))
   }
 
   test("distributed probe/update refuse a truncated shard snapshot") {
@@ -84,21 +90,21 @@ class BloomShardsSpec extends AnyFunSuite with SparkSpec {
     assert(a == b)
   }
 
-  test("repeated probeCol/notSeen calls accumulate no broadcast blocks") {
+  test("repeated notSeen calls accumulate no broadcast blocks") {
     import spark.implicits._
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.{Seconds, Span}
-    // probeCol ships shard bytes in the UDF closure (inside the Spark-managed
-    // task-binary broadcast) instead of an explicit broadcast it could never
-    // destroy (a Column has no post-action lifecycle seam) — so nothing can
+    // shard bytes stay a Dataset that meets the keys in a cogroup, never an
+    // explicit broadcast the library could not destroy — so nothing can
     // accumulate across calls once jobs complete and references drop.
     val seen = (0 until 2000).map(i => s"u$i").toDF("k")
     val candidates = (1000 until 3000).map(i => s"u$i").toDF("k")
+    val shards = BloomShards.buildDf(seen, "k", 4)
     def blocks() = org.apache.spark.graftaccess.GraftTestAccess.broadcastBlockCount(spark)
     System.gc()
     val baseline = eventually(timeout(Span(30, Seconds))) { val b = blocks(); b }
     (0 until 5).foreach { _ =>
-      assert(BloomShards.notSeen(candidates, seen, "k", nShards = 4).count() == 1000)
+      assert(BloomShards.notSeen(candidates, seen, "k", shards, 4).count() == 1000)
     }
     eventually(timeout(Span(30, Seconds))) {
       System.gc() // let the ContextCleaner reap anything unreferenced
@@ -111,7 +117,7 @@ class BloomShardsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val seen = Seq.empty[String].toDF("k")
     val candidates = (0 until 10).map(i => s"x$i").toDF("k")
-    val out = BloomShards.notSeen(candidates, seen, "k", nShards = 2)
+    val out = BloomShards.notSeen(candidates, seen, "k", BloomShards.buildDf(seen, "k", 2), 2)
     assert(out.count() == 10)
   }
 
@@ -140,12 +146,5 @@ class BloomShardsSpec extends AnyFunSuite with SparkSpec {
     val s2Counts = sat.map(t => t._1 -> t._2).toMap
     assert(tRows.length < n)
     assert(tRows.forall { case (sid, ins) => ins == s2Counts(sid) + 1L }, s"got ${tRows.toSeq}")
-    // legacy shard tables (no inserts column) keep working: counts restart
-    // at zero (a documented lower bound), membership untouched
-    val legacy = s2.select("shard", "bytes")
-    val s3 = BloomShards.updateDf(legacy, Seq("u401").toDF("k"), "k", n)
-    assert(BloomShards.saturationDf(s3, cap).agg(max(col("inserts"))).head().getLong(0) == 1L)
-    val probe3 = BloomShards.probeFlagsDf((0 until 400).map(i => s"u$i").toDF("k"), "k", s3, n)
-    assert(probe3.filter(not(col("maybe"))).count() == 0)
   }
 }
