@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.CrawlConfig
 import graft.corpus.CorpusTable
 import graft.frontier.SnapshotStore
+import graft.functions.expressions.UrlFunctions.urlHost
 import graft.operators._
 import graft.round.CrawlEngine
 
@@ -53,7 +54,7 @@ object Bench {
     val frontier0 = corpusN.select(
       monotonically_increasing_id().as("id"),
       col("urlNorm").as("url"), col("urlNorm"),
-      regexp_extract(col("urlNorm"), "https://([^/]+)/", 1).as("host"),
+      urlHost(col("urlNorm")).as("host"),
       lit(graft.core.TaskStatus.Wait).as("status"),
       lit(0).as("attempt"), lit(0).as("priority"),
       col("warcTs"), lit(0).as("discoveredRound"),
@@ -71,19 +72,18 @@ object Bench {
       store.writeSeen(0, graft.seen.BloomShards.buildDf(
         frontier0.select("urlNorm"), "urlNorm", cfg.seenShards,
         cfg.seenExpectedPerShard, cfg.seenFpp))
-    store.commit(0, frontier0, hosts0, None, CrawlEngine.bootstrapMeta(nPages, cfg))
+    store.commit(0, frontier0, hosts0, None, CrawlEngine.bootstrapMeta(nPages, waits = nPages, cfg))
     val rules: Option[org.apache.spark.sql.DataFrame] = None // bench corpus serves no robots.txt
     onBootstrapDone()
     val out = Vector.newBuilder[(Long, Double)]
-    var fetched = 0L
     var v = 0
     var r = 0
     while (r < rounds) {
       val rt0 = System.nanoTime()
-      CrawlEngine.runRound(spark, store, corpusN, rules, cfg, v, r, nPages + fetched, nPages) match {
+      CrawlEngine.runRound(spark, store, corpusN, rules, cfg, v, r, nPages) match {
         case Some(o) =>
           val sec = (System.nanoTime() - rt0) / 1e9
-          fetched += o.selectedCount; v += 1
+          v += 1
           out += ((o.selectedCount, sec))
           System.err.println(f"[bench] round $r: ${o.selectedCount} fetches in $sec%.2f s")
         case None => r = rounds

@@ -27,16 +27,6 @@ import graft.frontier.SnapshotStore
   */
 object CrawlEngine {
 
-  /** Dev phase timing, enabled by SPARK_GRAFT_TIMING=1 (stderr). */
-  private val timing = sys.env.get("SPARK_GRAFT_TIMING").contains("1")
-  private def timed[T](name: String)(f: => T): T =
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime(); val x = f
-      System.err.println(f"[round-timing] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      x
-    }
-
   val FetchOrder: Seq[Column] =
     Seq(col("priority").desc, col("warcTs").asc_nulls_last, col("id").asc)
 
@@ -299,17 +289,61 @@ object CrawlEngine {
   }
 
   /** The state-dir schema every manifest this code commits carries as
-    * `schemaVersion`. [[runRound]] refuses to resume from a manifest with
-    * any other value: "4" is the first version whose frontier always has
+    * `schemaVersion`. [[checkedMeta]] refuses a manifest with any other
+    * value: "5" is the first version whose frontier always has
     * projectId/taskType, hosts always failCount, seen shards always
     * `inserts`, and whose manifests always carry every table's format and
-    * base plus `frontierSource`. */
-  val SchemaVersion = "4"
+    * base, `frontierSource` and the frontier's wait count `waits`. */
+  val SchemaVersion = "5"
+
+  /** The manifest of `version`, refused (before anything reads or writes a
+    * table) unless it carries [[SchemaVersion]]. */
+  private def checkedMeta(store: SnapshotStore, version: Int): Map[String, String] = {
+    val meta = store.readMeta(version)
+    require(meta.get("schemaVersion").contains(SchemaVersion),
+      s"state dir ${store.baseDir} v=$version has schemaVersion " +
+        s"${meta.getOrElse("schemaVersion", "(none)")}, this engine reads only " +
+        s"schemaVersion $SchemaVersion — start a new state dir")
+    meta
+  }
+
+  /** The frontier rows in wait status, as an observed aggregate of a commit
+    * write: the manifest's `waits` key. */
+  private def waitCount: Column =
+    sum(when(col("status") === TaskStatus.Wait, 1L).otherwise(0L)).as("waits")
+
+  /** An observed long sum of a finished write; 0 when the write saw no
+    * rows (a sum over no rows is null). */
+  private def observedLong(obs: org.apache.spark.sql.Observation, name: String): Long =
+    obs.get.getOrElse(name, null) match {
+      case n: java.lang.Long => n.longValue
+      case _ => 0L
+    }
+
+  /** The A5 resource the next batch acquires, read from the previous
+    * manifest's `resource.used.<id>` and `resource.fails.<id>` counters
+    * (absent = 0): the least-used by (usedCount, id) among the open
+    * resources — the bulk-synchronous twin of `findOneAndUpdate(sort asc
+    * usedCount, inc usedCount)`. A resource is open while its failures
+    * stay below `maxResourceFailures` (always, when that is 0). None: every
+    * resource is parked, the reference's pool-level NoResourcesAvailable
+    * (`TorResourceController.scala:59-60,86-96`). */
+  private[graft] def resourcePick(meta: Map[String, String], cfg: CrawlConfig): Option[String] =
+    cfg.resources
+      .filter(r => cfg.maxResourceFailures <= 0 ||
+        resourceCounter(meta, "fails", r) < cfg.maxResourceFailures)
+      .minByOption(r => (resourceCounter(meta, "used", r), r))
+
+  /** A manifest's `resource.<kind>.<id>` counter (absent = 0). */
+  private def resourceCounter(meta: Map[String, String], kind: String, r: String): Long =
+    meta.get(s"resource.$kind.$r").fold(0L)(_.toLong)
 
   /** The v0 manifest of a bootstrap commit: full tables, no `source`
-    * column, seen shards iff `cfg.seenFilter`. */
-  def bootstrapMeta(nextId: Long, cfg: CrawlConfig): Map[String, String] =
-    Map("nextRound" -> "0", "nextId" -> nextId.toString, "schemaVersion" -> SchemaVersion,
+    * column, seen shards iff `cfg.seenFilter`; `waits` = the v0 frontier's
+    * wait rows. */
+  def bootstrapMeta(nextId: Long, waits: Long, cfg: CrawlConfig): Map[String, String] =
+    Map("nextRound" -> "0", "nextId" -> nextId.toString, "waits" -> waits.toString,
+      "schemaVersion" -> SchemaVersion,
       "frontierFormat" -> "full", "frontierBase" -> "0", "frontierSource" -> "false",
       "hostsFormat" -> "full", "hostsBase" -> "0") ++
       (if (!cfg.seenFilter) Map.empty[String, String]
@@ -357,10 +391,12 @@ object CrawlEngine {
         rows.map(_._3).toDF("urlNorm"), "urlNorm", cfg.seenShards)
       store.writeSeen(0, seen0)
     }
-    store.commit(0, frontier0, hosts0, None, bootstrapMeta(rows.size, cfg))
+    val obs = org.apache.spark.sql.Observation("commit-v0")
+    store.commit(0, frontier0.observe(obs, waitCount), hosts0, None,
+      bootstrapMeta(rows.size, observedLong(obs, "waits"), cfg))
   }
 
-  final case class RoundOutcome(selectedCount: Long, newLinkCount: Long, waitsRemaining: Long)
+  final case class RoundOutcome(selectedCount: Long, newLinkCount: Long)
 
   /** Distributed exact global rank: `seqCol` = 1-based rank of each row by
     * `order`, computed without ever sorting on one partition or merging on
@@ -381,8 +417,8 @@ object CrawlEngine {
     val ranged = df.repartitionByRange(math.max(parts, 1), order: _*)
       .withColumn("__pid", spark_partition_id())
       .persist()
-    val counts = timed(s"rank-counts($seqCol)")(ranged.groupBy(col("__pid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1))
+    val counts = ranged.groupBy(col("__pid")).count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     var acc = 0L
     val offsetByPid = counts.map { case (pid, n) => val o = acc; acc += n; pid -> o }.toMap
     val offExpr =
@@ -497,6 +533,12 @@ object CrawlEngine {
     * classify → commit. Returns None if nothing was eligible (caller jumps
     * the round counter).
     *
+    * Everything a round carries forward comes from the previous manifest
+    * (`meta0`) and goes into the one it commits: the next id, the wait
+    * count and the A5 resource counters. The batch acquires
+    * [[resourcePick]]'s resource; its usage count and this round's fetch
+    * failures (the pool breaker's) are charged to it in the manifest.
+    *
     * The round decides once whether its plans run compiled or interpreted
     * ([[interpretRound]]) from the frontier and corpus sizes. Ids are
     * dense, so the previous manifest's `nextId` is the frontier's exact row
@@ -509,34 +551,19 @@ object CrawlEngine {
       cfg: CrawlConfig,
       version: Int, // previous committed snapshot
       round: Int,
-      nextId: Long,
       // rows in the staged corpus: every round scans all of them, so they
       // count towards the round's execution mode
       corpusRows: Long,
-      hooks: PipelineHooks = PipelineHooks(),
-      // global wait-count after the previous round, if the caller knows it
-      // (-1 = unknown); lets delta-layout rounds maintain the count
-      // incrementally instead of re-scanning the merged frontier
-      knownWaits: Long = -1L,
-      // A5 resource accounting from the driver loop (the picked resource +
-      // updated usedCounts), persisted in this round's manifest so the
-      // balance resumes exactly; empty when the caller doesn't track it
-      resourceMeta: Map[String, String] = Map.empty,
-      // pool-breaker baseline: per-resource cumulative failure counts as of
-      // the PREVIOUS round. The round's own io+generic failures (known only
-      // at commit time, from the outcome observation) are charged to the
-      // picked resource inside the manifest closure, so `resource.fails.*`
-      // in the committed manifest is always the post-round truth a resumed
-      // crawl restores (`TorResourceController.scala:59-60,86-96`).
-      resourceFails: Map[String, Long] = Map.empty): Option[RoundOutcome] = {
-    val meta0 = store.readMeta(version)
-    require(meta0.get("schemaVersion").contains(SchemaVersion),
-      s"state dir ${store.baseDir} v=$version has schemaVersion " +
-        s"${meta0.getOrElse("schemaVersion", "(none)")}, this engine reads only " +
-        s"schemaVersion $SchemaVersion — start a new state dir")
-    val interpreted =
-      forcedInterpreted.value.getOrElse(interpretRound(meta0("nextId").toLong, corpusRows))
+      hooks: PipelineHooks = PipelineHooks()): Option[RoundOutcome] = {
+    val meta0 = checkedMeta(store, version)
+    val nextId = meta0("nextId").toLong
+    val resource = resourcePick(meta0, cfg).getOrElse(throw new IllegalArgumentException(
+      s"every resource of ${cfg.resources.mkString(", ")} reached maxResourceFailures"))
+    val interpreted = forcedInterpreted.value.getOrElse(interpretRound(nextId, corpusRows))
     val restoreSettings = applyRoundSettings(spark, interpreted)
+    // every cache the round builds, released however the round ends
+    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persisted(df: DataFrame): DataFrame = { caches += df.persist(); df }
     try {
       import spark.implicits._
 
@@ -595,6 +622,7 @@ object CrawlEngine {
       // single-partition sort), then keep the ≤ roundBudget head.
       val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val (ranked, rankedCache, eligibleTotal) = withGlobalSeq(perHost, FetchOrder, parts, "seqL")
+      caches += rankedCache
       // the round's lease size is known EXACTLY here: ranks are 1..total and
       // the cut keeps seqL ≤ roundBudget, so selected = min(total, budget).
       // Deriving it from the rank counts (instead of a fetched.count() after
@@ -603,12 +631,7 @@ object CrawlEngine {
       // link-discovery/commit jobs it feeds, and an empty round exits before
       // the fetch join is even built.
       val selectedCount = math.min(eligibleTotal, cfg.roundBudget.toLong)
-      if (selectedCount == 0) {
-        // the nothing-eligible path repeats on politeness tick jumps — it
-        // must release the rank cache or each empty round pins it
-        rankedCache.unpersist(blocking = true)
-        return None
-      }
+      if (selectedCount == 0) return None
       val selected = ranked
         .filter(col("seqL") <= cfg.roundBudget)
         .withColumn("seq", col("seqL").cast("int"))
@@ -656,7 +679,7 @@ object CrawlEngine {
       // no-raw-sink configuration).
       val fetchedCols = Seq("id", "seq", "urlNorm", "host", "projectId",
         "outcome", "parsed") ++ (if (hooks.rawSinks.nonEmpty) Seq("htmlStr") else Nil)
-      val fetched = fetchedWide.select(fetchedCols.map(col): _*).persist()
+      val fetched = persisted(fetchedWide.select(fetchedCols.map(col): _*))
 
       // fetch records (the crawl-order contract surface). The D1 per-outcome
       // report rides the results write as an Observation and lands in the
@@ -729,6 +752,7 @@ object CrawlEngine {
       // same mechanism as the R2 cut
       val (newRanked, newRankedCache, _) =
         withGlobalSeq(newLinks, Seq(col("seq"), col("pos")), parts, "idx")
+      caches += newRankedCache
       // robots verdict via a left join on the per-host rules Dataset (never a
       // driver map): new links per round × tiny-or-sharded rules — AQE
       // broadcasts small rule tables, shuffles huge ones, either way the
@@ -750,7 +774,7 @@ object CrawlEngine {
         .withColumn("taskType",
           coalesce(element_at(typeByProject, col("projectId")),
             lit(cfg.projects.head.taskType)))
-      val discovered = (rulesDf match {
+      val discovered = persisted((rulesDf match {
         case None => newBase.withColumn("status", lit(TaskStatus.Wait))
         case Some(rules) => newBase
           .join(rules, Seq("host"), "left")
@@ -763,8 +787,7 @@ object CrawlEngine {
         .select((Seq(col("id"), col("url"), col("urlNorm"), col("host"), col("status"),
           col("attempt"), col("priority"), col("warcTs"), col("discoveredRound"),
           col("projectId"), col("taskType")) ++
-          (if (carrySource) Seq(lit(null).cast("string").as("source")) else Nil)): _*)
-        .persist()
+          (if (carrySource) Seq(lit(null).cast("string").as("source")) else Nil)): _*))
 
       // G2/G3 + D1: status machine via outcome join on id. No broadcast
       // hint: outcomes is ≤ roundBudget rows — forcing a broadcast made the
@@ -818,8 +841,7 @@ object CrawlEngine {
       // discoveredRound == round+1)
       val obs = org.apache.spark.sql.Observation(s"commit-v${version + 1}")
       val frontier2 = updated.unionByName(discovered)
-        .observe(obs,
-          sum(when(col("status") === TaskStatus.Wait, 1L).otherwise(0L)).as("waits"),
+        .observe(obs, waitCount,
           sum(when(col("discoveredRound") === round + 1, 1L).otherwise(0L)).as("newLinks"))
 
       // F2/F3 host-state rewrite + D3 failCount circuit breaker: fetch
@@ -844,30 +866,21 @@ object CrawlEngine {
                 cfg.politenessCenterTicks, cfg.politenessRadiusTicks),
               coalesce(col("rbDelayTicks"), lit(0L)))))
         .select(col("host"), col("newTick"), col("nFails"))
-      // full commit: every host row re-materialized (the merged view).
-      // delta commit: ONLY hosts this round touched — the old failCount rides
-      // a right join (touched side preserved), untouched hosts stay on disk
-      // and the snapshot layer keeps-latest-by-host at read time. Same
-      // rewrite exprs either way (round-2 scale-killer B: at 10^8 hosts the
-      // full-outer rewrite was a frontier-sized write per round).
-      val hosts2 =
-        if (deltaMode)
-          hosts.select(col("host"), col("failCount")).join(hostUpdates, Seq("host"), "right")
-            .withColumn("failCount2",
-              (coalesce(col("failCount"), lit(0)) + coalesce(col("nFails"), lit(0))).cast("int"))
-            .select(col("host"),
-              when(lit(cfg.maxHostFailures > 0) && col("failCount2") >= cfg.maxHostFailures,
-                lit(DeadTick))
-                .otherwise(col("newTick")).as("nextTick"),
-              col("failCount2").as("failCount"))
-        else hosts.join(hostUpdates, Seq("host"), "full_outer")
-          .withColumn("failCount2",
-            (coalesce(col("failCount"), lit(0)) + coalesce(col("nFails"), lit(0))).cast("int"))
-          .select(col("host"),
-            when(lit(cfg.maxHostFailures > 0) && col("failCount2") >= cfg.maxHostFailures,
-              lit(DeadTick))
-              .otherwise(coalesce(col("newTick"), col("nextTick"))).as("nextTick"),
-            col("failCount2").as("failCount"))
+      // full commit: every host row re-materialized (the merged view), a
+      // full outer join. delta commit: ONLY hosts this round touched — the
+      // old failCount rides a right join (touched side preserved, so
+      // newTick is never null), untouched hosts stay on disk and the
+      // snapshot layer keeps-latest-by-host at read time (round-2
+      // scale-killer B: at 10^8 hosts the full-outer rewrite was a
+      // frontier-sized write per round).
+      val hosts2 = hosts.join(hostUpdates, Seq("host"), if (deltaMode) "right" else "full_outer")
+        .withColumn("failCount2",
+          (coalesce(col("failCount"), lit(0)) + coalesce(col("nFails"), lit(0))).cast("int"))
+        .select(col("host"),
+          when(lit(cfg.maxHostFailures > 0) && col("failCount2") >= cfg.maxHostFailures,
+            lit(DeadTick))
+            .otherwise(coalesce(col("newTick"), col("nextTick"))).as("nextTick"),
+          col("failCount2").as("failCount"))
 
       // R7 shard update: cogroup on shard id — network cost ∝ new links +
       // touched shard bytes, driver cost zero; persisted with the snapshot
@@ -905,7 +918,7 @@ object CrawlEngine {
           if (seenDelta) // touched shards only; merge-on-read fills the rest
             graft.seen.BloomShards.updateTouchedDf(shardsDf, newKeys, "urlNorm", cfg.seenShards)
           else graft.seen.BloomShards.updateDf(shardsDf, newKeys, "urlNorm", cfg.seenShards)
-        timed("seen-update")(store.writeSeen(version + 1, seen2))
+        store.writeSeen(version + 1, seen2)
         if (!seenDelta) {
           val maxIns = store.readSeen(version + 1).agg(max(col("inserts"))).head().getLong(0)
           var ratio = maxIns.toDouble / math.max(effCapacity, 1L)
@@ -924,7 +937,7 @@ object CrawlEngine {
             val allKeys = frontier.select("urlNorm").unionByName(newKeys)
             val rebuilt = graft.seen.BloomShards.buildDf(
               allKeys, "urlNorm", cfg.seenShards, newCap, cfg.seenFpp)
-            timed("seen-resize")(store.writeSeen(version + 1, rebuilt))
+            store.writeSeen(version + 1, rebuilt)
             seenCapacityOut = newCap
             ratio = maxIns.toDouble / newCap
           } else if (ratio >= 0.9)
@@ -944,29 +957,34 @@ object CrawlEngine {
         hooks.rawSinks.foreach(_.write(raw, version + 1))
       }
       hooks.parsedSinks.foreach(_.write(records, version + 1))
-      def obsLong(name: String, default: Long): Long =
-        obs.get.getOrElse(name, null) match {
-          case n: java.lang.Long => n.longValue
-          case _ => default // empty frontier write ⇒ no rows observed
-        }
       // meta is by-name: evaluated inside commit AFTER the frontier write,
       // when the observation metrics exist
-      timed("commit")(store.commit(version + 1, frontier2, hosts2, Some(records), {
+      store.commit(version + 1, frontier2, hosts2, Some(records), {
         val ocLong = recObs.get.collect { case (k, v: java.lang.Long) => k -> v.longValue }
         val outcomeCounts = ocLong.map { case (k, v) => s"outcome.$k" -> v.toString }
-        // pool breaker: charge this round's fetch failures to the resource
-        // that served the batch; all counters land in the manifest
+        // A5 + pool breaker: the batch's acquisition and its fetch failures
+        // are charged to the resource that served it
         val failInc = ocLong.getOrElse(Outcome.IoFailed, 0L) +
           ocLong.getOrElse(Outcome.GenericFailed, 0L)
-        val failsMeta = resourceFails.map { case (r, f) =>
-          s"resource.fails.$r" ->
-            (if (resourceMeta.get("resource").contains(r)) f + failInc else f).toString
-        }
-        failsMeta ++ Map("nextRound" -> (round + 1).toString,
+        val resourceMeta = cfg.resources.flatMap { r =>
+          def charged(kind: String, inc: Long): (String, String) = s"resource.$kind.$r" ->
+            (resourceCounter(meta0, kind, r) + (if (r == resource) inc else 0L)).toString
+          Seq(charged("used", 1L), charged("fails", failInc))
+        }.toMap + ("resource" -> resource)
+        val newLinks = observedLong(obs, "newLinks")
+        // full commit: the observation saw the whole frontier. Delta commit:
+        // it saw only touched rows — every selected row left the wait pool
+        // and re-entered iff its delta row is Wait, untouched waits carried
+        // over.
+        val waits =
+          if (deltaMode) meta0("waits").toLong - selectedCount + observedLong(obs, "waits")
+          else observedLong(obs, "waits")
+        Map("nextRound" -> (round + 1).toString,
           "round" -> round.toString,
-          "nextId" -> (nextId + obsLong("newLinks", 0L)).toString,
+          "nextId" -> (nextId + newLinks).toString,
+          "waits" -> waits.toString,
           "selected" -> selectedCount.toString,
-          "newLinks" -> obsLong("newLinks", 0L).toString,
+          "newLinks" -> newLinks.toString,
           "schemaVersion" -> SchemaVersion,
           "frontierFormat" -> (if (deltaMode) "delta" else "full"),
           "frontierBase" -> (if (deltaMode) meta0("frontierBase") else (version + 1).toString),
@@ -984,25 +1002,16 @@ object CrawlEngine {
             Map("seenMaxShardInserts" -> ins.toString,
               "seenFillRatio" -> f"$ratio%.4f")
           } ++ resourceMeta ++ outcomeCounts
-      }, concurrent = seenWriteUnit))
+      }, concurrent = seenWriteUnit)
       seenWarning.foreach { w =>
         System.err.println(w)
         hooks.notifiers.foreach(_.onWarning(w))
       }
-      val newLinkCount = obsLong("newLinks", 0L)
-      // full commit: the observation saw the whole frontier. Delta commit:
-      // it saw only touched rows — every selected row left the wait pool and
-      // re-entered iff its delta row is Wait, untouched waits carried over.
-      val waitsRemaining =
-        if (!deltaMode) obsLong("waits", -1L)
-        else if (knownWaits >= 0) knownWaits - selectedCount + obsLong("waits", 0L)
-        else -1L
-      fetched.unpersist(blocking = true)
-      discovered.unpersist(blocking = true)
-      rankedCache.unpersist(blocking = true)
-      newRankedCache.unpersist(blocking = true)
-      Some(RoundOutcome(selectedCount, newLinkCount, waitsRemaining))
-    } finally restoreSettings()
+      Some(RoundOutcome(selectedCount, observedLong(obs, "newLinks")))
+    } finally {
+      restoreSettings()
+      caches.foreach(_.unpersist(blocking = true))
+    }
   }
 
   final case class CrawlSummary(rounds: Int, versions: Int, fetches: Long, frontierSize: Long)
@@ -1024,9 +1033,13 @@ object CrawlEngine {
     else None
 
   /** Driver loop: resume from the latest committed snapshot (or bootstrap),
-    * then run rounds until no wait-state rows remain (or maxRounds). Each
-    * round owns its Spark settings ([[runRound]]); staging, bootstrap and
-    * the loop's own counting scans run with the caller's. */
+    * then run rounds until no wait-state rows remain (or maxRounds). The
+    * loop keeps only the version and the round; the stop decision reads the
+    * wait count and the resource counters from the latest manifest, so a
+    * resume scans no table. Each round owns its Spark settings
+    * ([[runRound]]); staging, bootstrap and the nothing-eligible tick jump
+    * run with the caller's. The crawl's caches (robots rules, a
+    * memory-staged corpus) are released however it ends. */
   def crawl(
       spark: SparkSession,
       store: SnapshotStore,
@@ -1034,6 +1047,8 @@ object CrawlEngine {
       seeds: Seq[(String, Int)],
       cfg: CrawlConfig,
       hooks: PipelineHooks = PipelineHooks()): CrawlSummary = {
+    // a state dir of another schema is refused before the corpus is staged
+    store.latestVersion.foreach(checkedMeta(store, _))
     val corpusN =
       if (cfg.corpusStaging == "bucketed") corpusStagedBucketed(spark, corpus, store.baseDir)
       else corpusStaged(spark, corpus)
@@ -1053,106 +1068,54 @@ object CrawlEngine {
           val raw = hostRules(spark, corpusN).persist()
           if (raw.count() == 0) { raw.unpersist(blocking = true); None } else Some(raw)
       }
-    if (store.latestVersion.isEmpty)
-      bootstrap(spark, store, corpusN, rulesDf, seeds, cfg)
-
-    var version = store.latestVersion.get
-    var meta = store.readMeta(version)
-    var round = meta("nextRound").toInt
-    var nextId = meta("nextId").toLong
-    var fetchTotal = 0L
-    var running = true
-    var stopReason = StopReason.MaxRounds
-    // A5 per-resource usage counters, restored from the latest manifest
-    // (`resource.used.<id>` keys) so a resumed crawl balances exactly
-    val usedCount = scala.collection.mutable.Map.empty[String, Long]
-      .withDefaultValue(0L)
-    // pool breaker: cumulative per-resource failure counts, restored from
-    // the manifest alongside the usage counters
-    val failCount = scala.collection.mutable.Map.empty[String, Long]
-      .withDefaultValue(0L)
-    def restoreResourceCounters(m: Map[String, String]): Unit = m.foreach { case (k, v) =>
-      if (k.startsWith("resource.used.")) usedCount(k.stripPrefix("resource.used.")) = v.toLong
-      else if (k.startsWith("resource.fails.")) failCount(k.stripPrefix("resource.fails.")) = v.toLong
-    }
-    restoreResourceCounters(meta)
-    def openResources: Seq[String] =
-      if (cfg.maxResourceFailures <= 0) cfg.resources
-      else cfg.resources.filter(r => failCount(r) < cfg.maxResourceFailures)
-    // the staged corpus's row count for the rounds' execution mode: the
-    // staging marker's count (no job), or one count that builds the
-    // memory-staged cache the first round would build anyway
-    lazy val corpusRows =
-      if (cfg.corpusStaging == "bucketed")
-        stagingMarker(store.baseDir).get("rawCount").map(_.toLong).getOrElse(corpusN.count())
-      else corpusN.count()
-    // wait-count carried across rounds by the commit-time observe; a full
-    // frontier scan happens only on resume entry and on the rare
-    // nothing-eligible jump
-    var waitsKnown: Long = -1L
-    // F6 wall-clock batch-execution timeout: measured from loop entry, so
-    // a resumed crawl gets a fresh allowance (the reference's timeout is
-    // per batch controller lifetime, `WorkerManager.scala:85-96`)
-    val wallT0 = System.nanoTime()
-    def wallExpired: Boolean =
-      cfg.maxWallSecs > 0 && (System.nanoTime() - wallT0) / 1e9 >= cfg.maxWallSecs
-    while (running && round < cfg.maxRounds) {
-      // unknown wait-count (resume entry, or a delta round that lost it):
-      // one counting scan seeds the incrementally-maintained counter
-      if (waitsKnown < 0)
-        waitsKnown = store.readFrontier(version)
-          .filter(col("status") === TaskStatus.Wait).count()
-      stopCheck(waitsKnown, wallExpired, openResources.isEmpty) match {
-        case Some(reason) => running = false; stopReason = reason
-        case None =>
-      {
-        // A5 least-used resource pick for this batch, BEFORE the lease —
-        // the bulk-synchronous twin of `findOneAndUpdate(sort asc
-        // usedCount, inc usedCount)`: min by (usedCount, id) over the OPEN
-        // resources (closed ones are parked for good). The increment only
-        // persists if the round commits (no batch ⇒ no acquisition,
-        // matching the reference's per-batch acquisition).
-        val resource = openResources.minBy(r => (usedCount(r), r))
-        val resourceMeta = Map(
-          "resource" -> resource,
-          s"resource.used.$resource" -> (usedCount(resource) + 1).toString) ++
-          cfg.resources.filter(_ != resource)
-            .map(r => s"resource.used.$r" -> usedCount(r).toString)
-        runRound(spark, store, corpusN, rulesDf, cfg, version, round, nextId, corpusRows, hooks,
-            knownWaits = waitsKnown, resourceMeta = resourceMeta,
-            resourceFails = cfg.resources.map(r => r -> failCount(r)).toMap) match {
-          case Some(out) =>
-            usedCount(resource) += 1
-            version += 1
-            meta = store.readMeta(version)
-            // the committed manifest carries the post-round failure counts
-            // (the round's failures charged to `resource` at commit time)
-            restoreResourceCounters(meta)
-            round = meta("nextRound").toInt
-            nextId = meta("nextId").toLong
-            fetchTotal += out.selectedCount
-            waitsKnown = out.waitsRemaining
-          case None =>
-            // nothing eligible: jump to the earliest reopen tick among
-            // hosts that still hold waits (pure function of state). If
-            // every such host is closed (DeadTick), the crawl has no
-            // resources left — stop (D3 NoResourcesAvailable).
-            val minNext = store.readFrontier(version)
-              .filter(col("status") === TaskStatus.Wait)
-              .join(store.readHosts(version).select("host", "nextTick"), Seq("host"), "left")
-              .agg(min(coalesce(col("nextTick"), lit(0L)))).head().getLong(0)
-            if (minNext >= DeadTick) {
-              running = false; stopReason = StopReason.NoResourcesAvailable
-            }
-            else round = math.max(round + 1, minNext.toInt)
-        }
+    val (version, round, fetches, stopReason) = try {
+      if (store.latestVersion.isEmpty)
+        bootstrap(spark, store, corpusN, rulesDf, seeds, cfg)
+      var version = store.latestVersion.get
+      var round = store.readMeta(version)("nextRound").toInt
+      var fetches = 0L
+      var stopReason: Option[String] = None
+      // the staged corpus's row count for the rounds' execution mode: the
+      // staging marker's count (no job), or one count that builds the
+      // memory-staged cache the first round would build anyway
+      lazy val corpusRows =
+        if (cfg.corpusStaging == "bucketed")
+          stagingMarker(store.baseDir).get("rawCount").map(_.toLong).getOrElse(corpusN.count())
+        else corpusN.count()
+      // F6 wall-clock batch-execution timeout: measured from loop entry, so
+      // a resumed crawl gets a fresh allowance (the reference's timeout is
+      // per batch controller lifetime, `WorkerManager.scala:85-96`)
+      val wallT0 = System.nanoTime()
+      def wallExpired: Boolean =
+        cfg.maxWallSecs > 0 && (System.nanoTime() - wallT0) / 1e9 >= cfg.maxWallSecs
+      while (stopReason.isEmpty && round < cfg.maxRounds) {
+        val meta = store.readMeta(version)
+        stopReason = stopCheck(meta("waits").toLong, wallExpired, resourcePick(meta, cfg).isEmpty)
+        if (stopReason.isEmpty)
+          runRound(spark, store, corpusN, rulesDf, cfg, version, round, corpusRows, hooks) match {
+            case Some(out) =>
+              version += 1
+              round = store.readMeta(version)("nextRound").toInt
+              fetches += out.selectedCount
+            case None =>
+              // nothing eligible: jump to the earliest reopen tick among
+              // hosts that still hold waits (pure function of state). If
+              // every such host is closed (DeadTick), the crawl has no
+              // resources left — stop (D3 NoResourcesAvailable).
+              val minNext = store.readFrontier(version)
+                .filter(col("status") === TaskStatus.Wait)
+                .join(store.readHosts(version).select("host", "nextTick"), Seq("host"), "left")
+                .agg(min(coalesce(col("nextTick"), lit(0L)))).head().getLong(0)
+              if (minNext >= DeadTick) stopReason = Some(StopReason.NoResourcesAvailable)
+              else round = math.max(round + 1, minNext.toInt)
+          }
       }
-      }
+      (version, round, fetches, stopReason.getOrElse(StopReason.MaxRounds))
+    } finally {
+      rulesDf.foreach(_.unpersist(blocking = true))
+      if (cfg.corpusStaging != "bucketed") corpusN.unpersist()
     }
-    val frontierSize = store.readFrontier(version).count()
-    rulesDf.foreach(_.unpersist(blocking = true))
-    if (cfg.corpusStaging != "bucketed") corpusN.unpersist()
-    val summary = CrawlSummary(round, version, fetchTotal, frontierSize)
+    val summary = CrawlSummary(round, version, fetches, store.readFrontier(version).count())
     // notification seam (NotificationExecutor analog): surface the stop —
     // most importantly the D3 NoResourcesAvailable — to registered hooks
     hooks.notifiers.foreach(_.onStop(stopReason, summary))

@@ -65,28 +65,43 @@ object BloomShards {
     * untouched shards pass through byte-for-byte (the cogroup is full-outer
     * on shard id). Throws if a key's shard row is missing — a truncated
     * snapshot must never silently shrink the probe modulus. */
-  def updateDf(shards: DataFrame, newKeys: DataFrame, keyCol: String, nShards: Int): DataFrame = {
+  def updateDf(shards: DataFrame, newKeys: DataFrame, keyCol: String, nShards: Int): DataFrame =
+    cogroupKeys(shards, newKeys, keyCol, nShards)((sid, bs, ks) =>
+      Iterator.single(insertKeys(sid, bs, ks)))
+
+  /** `newKeys` grouped by shard, cogrouped with the shard rows: `f` gets a
+    * shard id, its snapshot rows and its keys, and emits the shard rows to
+    * write. */
+  private def cogroupKeys(shards: DataFrame, newKeys: DataFrame, keyCol: String, nShards: Int)(
+      f: (Int, Iterator[(Int, Array[Byte], Long)], Iterator[(String, Int)]) =>
+        Iterator[(Int, Array[Byte], Long)]): DataFrame = {
     val spark = shards.sparkSession
     import spark.implicits._
     val keysKV = withShard(newKeys, keyCol, nShards)
       .as[(String, Int)].groupByKey(_._2)
     val shardsKV = shards.select(col("shard"), col("bytes"), col("inserts"))
       .as[(Int, Array[Byte], Long)].groupByKey(_._1)
-    shardsKV.cogroup(keysKV) { (sid, bs, ks) =>
-      val existing = bs.toList
-      if (existing.isEmpty)
-        throw new IllegalStateException(s"seen-shard $sid missing from snapshot")
-      if (existing.sizeIs > 1)
-        throw new IllegalStateException(s"seen-shard $sid duplicated in snapshot")
-      if (ks.isEmpty) Iterator.single(existing.head)
-      else {
-        val f = BloomFilter.readFrom(new ByteArrayInputStream(existing.head._2))
-        var n = 0L
-        ks.foreach { case (k, _) => f.putString(k); n += 1 }
-        val bos = new ByteArrayOutputStream(); f.writeTo(bos)
-        Iterator.single((sid, bos.toByteArray, existing.head._3 + n))
-      }
-    }.toDF("shard", "bytes", "inserts")
+    shardsKV.cogroup(keysKV)(f).toDF("shard", "bytes", "inserts")
+  }
+
+  /** Shard `sid` after inserting `ks`: its one snapshot row `bs` as is
+    * when `ks` is empty, else deserialized, inserted into and serialized
+    * with `inserts` advanced. Throws unless `bs` holds exactly one row. */
+  private def insertKeys(sid: Int, bs: Iterator[(Int, Array[Byte], Long)],
+                         ks: Iterator[(String, Int)]): (Int, Array[Byte], Long) = {
+    val existing = bs.toList
+    if (existing.isEmpty)
+      throw new IllegalStateException(s"seen-shard $sid missing from snapshot")
+    if (existing.sizeIs > 1)
+      throw new IllegalStateException(s"seen-shard $sid duplicated in snapshot")
+    if (ks.isEmpty) existing.head
+    else {
+      val f = BloomFilter.readFrom(new ByteArrayInputStream(existing.head._2))
+      var n = 0L
+      ks.foreach { case (k, _) => f.putString(k); n += 1 }
+      val bos = new ByteArrayOutputStream(); f.writeTo(bos)
+      (sid, bos.toByteArray, existing.head._3 + n)
+    }
   }
 
   /** Like [[updateDf]] but emits ONLY the shards that received at least
@@ -98,29 +113,11 @@ object BloomShards {
     * shrinks (a missing shard row still fails loudly at merge time via
     * [[updateDf]]/[[probeFlagsDf]] existence checks). */
   def updateTouchedDf(shards: DataFrame, newKeys: DataFrame, keyCol: String,
-                      nShards: Int): DataFrame = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val keysKV = withShard(newKeys, keyCol, nShards)
-      .as[(String, Int)].groupByKey(_._2)
-    val shardsKV = shards.select(col("shard"), col("bytes"), col("inserts"))
-      .as[(Int, Array[Byte], Long)].groupByKey(_._1)
-    shardsKV.cogroup(keysKV) { (sid, bs, ks) =>
-      if (ks.isEmpty) Iterator.empty // untouched: pass-through is implicit in merge-on-read
-      else {
-        val existing = bs.toList
-        if (existing.isEmpty)
-          throw new IllegalStateException(s"seen-shard $sid missing from snapshot")
-        if (existing.sizeIs > 1)
-          throw new IllegalStateException(s"seen-shard $sid duplicated in snapshot")
-        val f = BloomFilter.readFrom(new ByteArrayInputStream(existing.head._2))
-        var n = 0L
-        ks.foreach { case (k, _) => f.putString(k); n += 1 }
-        val bos = new ByteArrayOutputStream(); f.writeTo(bos)
-        Iterator.single((sid, bos.toByteArray, existing.head._3 + n))
-      }
-    }.toDF("shard", "bytes", "inserts")
-  }
+                      nShards: Int): DataFrame =
+    cogroupKeys(shards, newKeys, keyCol, nShards) { (sid, bs, ks) =>
+      // untouched: pass-through is implicit in merge-on-read
+      if (ks.isEmpty) Iterator.empty else Iterator.single(insertKeys(sid, bs, ks))
+    }
 
   /** Build a shard Dataset from scratch over a key column. */
   def buildDf(keys: DataFrame, keyCol: String, nShards: Int,

@@ -8,6 +8,7 @@ import graft.core._
 import graft.corpus.{CorpusGen, CorpusTable}
 import graft.frontier.SnapshotStore
 import graft.sim.ReferenceSimulator
+import org.apache.spark.sql.graftaccess.GraftTestAccess
 
 /** The crawl-order exact-match gate (BASELINE.md): the Spark engine's fetch
   * sequence (round, seq, urlNorm, outcome) must equal the clean-room
@@ -280,6 +281,15 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     assert(deltaVs.exists { v =>
       spark.read.parquet(s"$delta/v=$v/seen").count() < 8
     }, "every seen delta rewrote all shards")
+    // every manifest carries the wait count of its frontier: observed by a
+    // full commit, carried forward by a delta one, across the resume
+    Seq(fStore, store).foreach { st =>
+      (0 to st.latestVersion.get).foreach { v =>
+        val waits = st.readFrontier(v)
+          .filter(org.apache.spark.sql.functions.col("status") === TaskStatus.Wait).count()
+        assert(st.readMeta(v)("waits") == waits.toString, s"${st.baseDir} v=$v")
+      }
+    }
   }
 
   test("resume with a different seenShards than the snapshot is refused") {
@@ -314,6 +324,7 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     // an older version, and a manifest without the key
     Seq(Some("3"), None).foreach { schemaVersion =>
       val dir = tmpDir(s"schema-${schemaVersion.getOrElse("none")}")
+      val cachedBefore = GraftTestAccess.cachedPlanCount(spark)
       CrawlEngine.crawl(spark, new SnapshotStore(dir, spark),
         corpus, CorpusGen.seeds(spec), cfg.copy(maxRounds = 1))
       val latest = new SnapshotStore(dir, spark).latestVersion.get
@@ -328,6 +339,8 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
       }
       assert(ex.getMessage.contains("schemaVersion") && ex.getMessage.contains("new state dir"),
         ex.getMessage)
+      // neither the crawl that committed nor the refused one leaves a cache
+      assert(GraftTestAccess.cachedPlanCount(spark) == cachedBefore, "the crawls left caches")
       assert(new SnapshotStore(dir, spark).latestVersion.contains(latest))
       assert(!Files.exists(java.nio.file.Paths.get(s"$dir/v=${latest + 1}")),
         "the refused round wrote state")
@@ -613,6 +626,45 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     assert(a == b)
   }
 
+  test("resuming a finished crawl runs only the summary's frontier count (no wait-count scan)") {
+    val smallSpec = CorpusGen.Spec(nHosts = 3, pagesPerHost = 10)
+    val pq = tmpDir("resume-src")
+    CorpusTable.create(spark, smallSpec).write.mode("overwrite").parquet(pq)
+    val dir = tmpDir("resume-jobs")
+    // bans reopen a host only after banBackoffTicks: allow the rounds to finish
+    val bCfg = cfg.copy(corpusStaging = "bucketed", maxRounds = 1000)
+    val stops = scala.collection.mutable.Buffer.empty[String]
+    val hooks = PipelineHooks(notifiers = Seq(
+      new CrawlNotifier {
+        override def onStop(reason: String, s: CrawlEngine.CrawlSummary): Unit = stops += reason
+      }))
+    CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), spark.read.parquet(pq),
+      CorpusGen.seeds(smallSpec), bCfg, hooks)
+    assert(stops.toList == List(StopReason.Completed))
+    // the caller's own footer/schema job runs before the count
+    val corpus = spark.read.parquet(pq)
+    val store = new SnapshotStore(dir, spark)
+    val latest = store.latestVersion.get
+    def jobsOf(f: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try { f; org.apache.spark.GraftSparkAccess.drainListenerBus(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get()
+    }
+    // staging reuse, the rules read and the stop decision run no job: the
+    // wait count comes from the manifest
+    val resumeJobs = jobsOf(CrawlEngine.crawl(spark, store, corpus, CorpusGen.seeds(smallSpec), bCfg, hooks))
+    val countJobs = jobsOf(store.readFrontier(latest).count())
+    assert(stops.toList == List(StopReason.Completed, StopReason.Completed))
+    assert(store.latestVersion.contains(latest))
+    assert(resumeJobs == countJobs, s"the resume ran $resumeJobs jobs, the frontier count $countJobs")
+  }
+
   test("stop precedence: Completed outranks WallClockTimeout outranks pool exhaustion") {
     // extracted pure so the race (frontier exhausted in the same round the
     // wall clock elapsed) is testable without a real clock — round-4 ADVICE
@@ -671,7 +723,7 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
       assert(CrawlEngine.interpretRound(meta("nextId").toLong, corpusRows), "state outgrew the threshold")
       // a tick past every politeness gap, so the round has work
       CrawlEngine.runRound(spark, store, corpusN, rules, prodCfg, v,
-        meta("nextRound").toInt + 100, meta("nextId").toLong, rows, hooks)
+        meta("nextRound").toInt + 100, rows, hooks)
     }
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val original = roundSettingValues
@@ -701,10 +753,13 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
           throw new IllegalStateException("raw sink down")
       }))
       Seq(true, false).foreach { interpreted =>
+        val cachedBefore = GraftTestAccess.cachedPlanCount(spark)
         val ex = intercept[IllegalStateException](
           CrawlEngine.forcedInterpreted.withValue(Some(interpreted))(nextRound(failingSink)))
         assert(ex.getMessage == "raw sink down")
         assert(roundSettingValues == caller, s"a throwing round (interpreted=$interpreted) leaked its settings")
+        assert(GraftTestAccess.cachedPlanCount(spark) == cachedBefore,
+          s"a throwing round (interpreted=$interpreted) leaked its caches")
       }
     } finally original.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

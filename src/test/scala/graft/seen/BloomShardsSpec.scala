@@ -100,7 +100,7 @@ class BloomShardsSpec extends AnyFunSuite with SparkSpec {
     val seen = (0 until 2000).map(i => s"u$i").toDF("k")
     val candidates = (1000 until 3000).map(i => s"u$i").toDF("k")
     val shards = BloomShards.buildDf(seen, "k", 4)
-    def blocks() = org.apache.spark.graftaccess.GraftTestAccess.broadcastBlockCount(spark)
+    def blocks() = org.apache.spark.sql.graftaccess.GraftTestAccess.broadcastBlockCount(spark)
     System.gc()
     val baseline = eventually(timeout(Span(30, Seconds))) { val b = blocks(); b }
     (0 until 5).foreach { _ =>
