@@ -22,10 +22,9 @@ object Bench {
 
   /** Frontier-throughput benchmark: N-page corpus generated distributed
     * (never on the driver), frontier v0 = every url in wait state, then
-    * `rounds` engine rounds with a large budget. Returns (fetches, sec). */
-  /** Like [[crawlRounds]] but returns per-round (fetches, sec) so callers
-    * can separate the warm-up round (cache first-touch, JIT) from
-    * steady-state rounds. */
+    * `rounds` engine rounds with a large budget. Returns per-round
+    * (fetches, sec), so callers can separate the warm-up round (cache
+    * first-touch, JIT) from steady-state rounds. */
   def crawlRoundsDetailed(spark: SparkSession, stateDir: String, nPages: Long,
                           nHosts: Int, rounds: Int, roundBudget: Int,
                           textRepeat: Int = 1,
@@ -68,11 +67,13 @@ object Bench {
       frontierLayout = layout, seenFilter = seenFilter,
       // size shards for the corpus so the filter stays at its design FPP
       seenExpectedPerShard = math.max(1L << 16, 2L * nPages / 16))
-    if (seenFilter)
-      store.writeSeen(0, graft.seen.BloomShards.buildDf(
+    val seen0 =
+      if (!seenFilter) None
+      else Some(SnapshotStore.SeenChanges(graft.seen.BloomShards.buildDf(
         frontier0.select("urlNorm"), "urlNorm", cfg.seenShards,
-        cfg.seenExpectedPerShard, cfg.seenFpp))
-    store.commit(0, frontier0, hosts0, None, CrawlEngine.bootstrapMeta(nPages, waits = nPages, cfg))
+        cfg.seenExpectedPerShard, cfg.seenFpp)))
+    store.commit(0, frontier0, hosts0, None, CrawlEngine.bootstrapMeta(nPages, waits = nPages, cfg),
+      seen = seen0)
     val rules: Option[org.apache.spark.sql.DataFrame] = None // bench corpus serves no robots.txt
     onBootstrapDone()
     val out = Vector.newBuilder[(Long, Double)]

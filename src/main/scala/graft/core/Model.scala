@@ -144,14 +144,15 @@ case class CrawlConfig(
     // vanishes. Seeds enter under projects.head; discovered links chain to
     // the parent project's nextProjectId.
     projects: Seq[ProjectSpec] = Seq(ProjectSpec.default),
-    // Frontier commit layout. "full" rewrites the whole frontier each
-    // round (simple; write cost ∝ frontier size — fine locally, impossible
-    // at 10^10 rows/round). "delta" writes ONLY the rows a round changed
-    // (status rewrites ≤ roundBudget + discovered links) and merges
-    // keep-latest-by-id at read time (Iceberg merge-on-read semantics),
-    // with a full compaction snapshot every `frontierCompactEvery` commits
-    // to bound the read-side merge fan-in. Crawl output is bit-identical
-    // either way (CrawlEngineSpec pins it).
+    // State-table compaction cadence (frontier, hosts, seen shards). A
+    // round hands the snapshot store only the rows it changed (status
+    // rewrites ≤ roundBudget, discovered links, touched hosts and shards);
+    // the store writes them as a delta merged keep-latest-by-key at read
+    // time (Iceberg merge-on-read), or compacts: writes the merged view.
+    // "full" = compaction every commit (write cost ∝ state size — fine
+    // locally, impossible at 10^10 rows/round); "delta" = compaction every
+    // `frontierCompactEvery` commits, bounding the read-side merge fan-in.
+    // Crawl output is bit-identical either way (CrawlEngineSpec pins it).
     frontierLayout: String = "full",
     frontierCompactEvery: Int = 8,
     maxRounds: Int = 64,

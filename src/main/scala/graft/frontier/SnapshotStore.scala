@@ -31,16 +31,25 @@ import org.apache.spark.sql.types._
   * resume overwrites it, giving exactly-once round semantics (lease
   * recovery F7/F8 for free).
   *
-  * Merge-on-read layouts (all three mutable state tables): a "delta"
-  * commit writes ONLY the rows the round changed; the read side
-  * reconstructs latest-base-plus-deltas keeping the newest row per key —
-  * frontier keyed by `id`, hosts by `host`, seen shards by `shard`. Write
-  * cost per round is ∝ round work instead of ∝ total state size (the
-  * round-2 scale-killers A+B: at 10^10 URLs the seen shards alone are
-  * ~12 GB of parquet that a full layout rewrites every round). Periodic
-  * full commits (compaction) bound the read-side merge fan-in.
+  * The store owns the state layout of all three mutable tables — frontier
+  * keyed by `id`, hosts by `host`, seen shards by `shard`. A commit hands
+  * it only each table's CHANGES (the rows the round rewrote or added, the
+  * delta form of the reference's per-batch row updates,
+  * `MongoQueueTaskProvider.scala:50-88`), and the store writes them one of
+  * two ways, the same code for every table:
+  *  - delta: the changes alone. Write cost per round is ∝ round work, not
+  *    ∝ state size (at 10^10 URLs the seen shards alone are ~12 GB of
+  *    parquet that a full rewrite pays every round);
+  *  - full (compaction): the previous version's merged view with the
+  *    changed keys replaced, `prev ⋉̸ changes.key ∪ changes`. A table is
+  *    written full at a compaction point (the caller's cadence) or when the
+  *    previous version has no such table (v0; the seen shards of a resume
+  *    that turns the filter on).
+  * The store stamps how it wrote each table in the manifest
+  * (`<table>Format` = full | delta, `<table>Base` = the newest full
+  * version), and reads follow those keys.
   *
-  * The merge is ONE parquet scan over the listed `v=base..K/<table>` dirs
+  * A read is ONE parquet scan over the listed `v=base..K/<table>` dirs
   * with `basePath` = `baseDir`, so `v` is a partition column; a window
   * keeps the row with the largest `v` per key. Every read passes the
   * engine-owned schema ([[SnapshotStore.FrontierSchema]], [[SnapshotStore.HostsSchema]],
@@ -56,6 +65,7 @@ import org.apache.spark.sql.types._
   * an uninterrupted one.
   */
 final class SnapshotStore(val baseDir: String, spark: SparkSession) {
+  import SnapshotStore.{Frontier, Hosts, Seen, SeenChanges, Table}
 
   private def dir(v: Int, part: String): String = s"$baseDir/v=$v/$part"
   private def manifestPath(v: Int): Path = Paths.get(s"$baseDir/manifest-$v.json")
@@ -74,24 +84,40 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
       .maxOption
   }
 
+  /** Commits version v: writes each state table's changes (full or as a
+    * delta, see the class doc; `compact` marks a compaction point), the
+    * fetch records and — when given — the seen shards' changes, then seals
+    * the manifest: `metaLazy`, the version, `hasResults` and how each table
+    * was written. */
   def commit(
       v: Int,
       frontier: DataFrame,
       hosts: DataFrame,
       results: Option[DataFrame],
       metaLazy: => Map[String, String],
-      // one more write unit to run CONCURRENTLY with the table writes and
-      // await before the manifest seals (the engine passes the seen-shard
-      // update here so its cogroup job overlaps the frontier/hosts/results
-      // writes instead of serializing in front of them). Await gives the
-      // happens-before edge, so `metaLazy` may read state the unit
-      // produced (e.g. the seen-saturation counters).
-      concurrent: Option[() => Unit] = None): Unit = {
+      compact: Boolean = false,
+      seen: Option[SeenChanges] = None): Unit = {
+    val prev =
+      if (v > 0 && Files.exists(manifestPath(v - 1))) readMeta(v - 1) else Map.empty[String, String]
+    // each table's base at v: v itself (written full) at a compaction point
+    // or when v-1 has no such table, else v-1's base (v is a delta over it)
+    val bases = (Seq(Frontier, Hosts) ++ seen.map(_ => Seen)).map { t =>
+      t -> prev.get(s"${t.name}Base").filter(_ => !compact).fold(v)(_.toInt)
+    }.toMap
+    // the full form reads `changes` twice (keys and rows); an Observation
+    // on it still reports each row once: both occurrences see the same rows
+    def write(t: Table, changes: DataFrame): Unit = {
+      val rows =
+        if (bases(t) == v && prev.contains(s"${t.name}Base"))
+          SnapshotStore.replaceByKey(readTable(t, v - 1, prev), changes, t.key)
+        else changes
+      rows.write.mode("overwrite").parquet(dir(v, t.name))
+    }
     // write-audit-publish: data first (overwrite any orphan), manifest last.
     // `metaLazy` is by-name: evaluated only after the data writes, so it can
     // read Observation metrics collected during the frontier write.
     //
-    // The three tables are independent DataFrames (they share only already-
+    // The tables are independent DataFrames (they share only already-
     // materialized caches), so their writes are submitted CONCURRENTLY and
     // awaited before the manifest seals. Sequential writes serialized three
     // driver-side plan+schedule+commit segments per round — a constant
@@ -112,10 +138,15 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
     {
       implicit val ec: scala.concurrent.ExecutionContext = SnapshotStore.commitEc
       val writes =
-        Future(frontier.write.mode("overwrite").parquet(dir(v, "frontier"))) ::
-          Future(hosts.write.mode("overwrite").parquet(dir(v, "hosts"))) ::
+        Future(write(Frontier, frontier)) ::
+          Future(write(Hosts, hosts)) ::
           results.map(r => Future(r.write.mode("overwrite").parquet(resultsDir(v)))).toList :::
-          concurrent.map(u => Future(u())).toList
+          seen.map(s => Future {
+            write(Seen, s.rows)
+            if (bases(Seen) == v)
+              s.afterFull(spark.read.schema(SnapshotStore.SeenSchema).parquet(dir(v, Seen.name)))
+                .foreach(write(Seen, _))
+          }).toList
       val failures = writes.flatMap(w => Await.ready(w, Duration.Inf).value.collect {
         case Failure(e) => e
       })
@@ -126,8 +157,12 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
         case Nil =>
       }
     }
-    val json = SnapshotStore.writeFlat(
-      metaLazy ++ Map("version" -> v.toString, "hasResults" -> results.isDefined.toString))
+    val layout = bases.flatMap { case (t, base) =>
+      Seq(s"${t.name}Format" -> (if (base == v) "full" else "delta"),
+        s"${t.name}Base" -> base.toString)
+    }
+    val json = SnapshotStore.writeFlat(metaLazy ++ layout ++
+      Map("version" -> v.toString, "hasResults" -> results.isDefined.toString))
     val tmp = Paths.get(s"$baseDir/.manifest-$v.tmp")
     Files.writeString(tmp, json)
     Files.move(tmp, manifestPath(v), StandardCopyOption.ATOMIC_MOVE)
@@ -136,59 +171,44 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
   def readMeta(v: Int): Map[String, String] =
     SnapshotStore.parseFlat(Files.readString(manifestPath(v)))
 
-  /** One state table at version `v` read with its engine-owned `schema`:
-    * the single `v` dir for a full commit, or — under the delta layout —
-    * ONE scan over `v=base..v` (`basePath` makes `v` a partition column)
-    * keeping the NEWEST row per `key`: Iceberg merge-on-read semantics over
+  /** `table` at version `v` (manifest `meta`) read with its engine-owned
+    * schema: the single `v` dir for a full version, or — for a delta — ONE
+    * scan over `v=base..v` (`basePath` makes `v` a partition column)
+    * keeping the NEWEST row per key: Iceberg merge-on-read semantics over
     * plain parquet. The window's shuffle is on the same key the consuming
     * join shuffles on anyway; what the layout buys is write cost ∝ changed
     * rows instead of ∝ table size per round. */
-  private def readTable(part: String, schema: StructType, key: String,
-                        delta: Option[Int], v: Int): DataFrame = delta match {
-    case None => spark.read.schema(schema).parquet(dir(v, part))
-    case Some(base) =>
-      val w = Window.partitionBy(col(key)).orderBy(col("v").desc)
+  private def readTable(table: Table, v: Int, meta: Map[String, String]): DataFrame = {
+    val schema = table match {
+      case Frontier => SnapshotStore.frontierSchema(meta.get("frontierSource").contains("true"))
+      case Hosts => SnapshotStore.HostsSchema
+      case _ => SnapshotStore.SeenSchema
+    }
+    if (!meta.get(s"${table.name}Format").contains("delta"))
+      spark.read.schema(schema).parquet(dir(v, table.name))
+    else {
+      val w = Window.partitionBy(col(table.key)).orderBy(col("v").desc)
       spark.read.schema(schema.add("v", IntegerType)).option("basePath", baseDir)
-        .parquet((base to v).map(dir(_, part)): _*)
+        .parquet((meta(s"${table.name}Base").toInt to v).map(dir(_, table.name)): _*)
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .drop("v", "__rn")
+    }
   }
-
-  /** The delta base of `table` at a committed version, None when the
-    * version is a full commit (or has no manifest). */
-  private def deltaBase(meta: Map[String, String], table: String): Option[Int] =
-    if (meta.get(s"${table}Format").contains("delta")) Some(meta(s"${table}Base").toInt)
-    else None
 
   /** The frontier at version v (merged view under the delta layout). */
-  def readFrontier(v: Int): DataFrame = {
-    val meta = readMeta(v)
-    readTable("frontier",
-      SnapshotStore.frontierSchema(meta.get("frontierSource").contains("true")),
-      "id", deltaBase(meta, "frontier"), v)
-  }
+  def readFrontier(v: Int): DataFrame = readTable(Frontier, v, readMeta(v))
 
   /** Host politeness/breaker state at version v (merged view under the
     * delta layout — a delta commit writes only the hosts the round
     * touched, never the full 10^8-host table). */
-  def readHosts(v: Int): DataFrame =
-    readTable("hosts", SnapshotStore.HostsSchema, "host", deltaBase(readMeta(v), "hosts"), v)
+  def readHosts(v: Int): DataFrame = readTable(Hosts, v, readMeta(v))
 
-  /** R7 seen-filter shards ((shard, bytes, inserts) rows), written as part
-    * of the same write-audit-publish cycle when the engine runs with the
-    * bloom pre-filter; absent otherwise. Must be written BEFORE `commit`
-    * seals the manifest. Under the delta layout the writer passes only the
-    * shards the round's new keys touched; [[readSeen]] merges
-    * keep-latest-by-shard over base..v. */
-  def writeSeen(v: Int, seen: DataFrame): Unit =
-    seen.write.mode("overwrite").parquet(dir(v, "seen"))
+  /** R7 seen-filter shards ((shard, bytes, inserts) rows) at version v,
+    * present iff the engine ran that version with the bloom pre-filter. */
   def hasSeen(v: Int): Boolean =
     Files.exists(manifestPath(v)) && readMeta(v).contains("seenFormat")
-  def readSeen(v: Int): DataFrame = {
-    val meta = if (Files.exists(manifestPath(v))) readMeta(v) else Map.empty[String, String]
-    readTable("seen", SnapshotStore.SeenSchema, "shard", deltaBase(meta, "seen"), v)
-  }
+  def readSeen(v: Int): DataFrame = readTable(Seen, v, readMeta(v))
 
   def hasResults(v: Int): Boolean = readMeta(v).get("hasResults").contains("true")
   /** All fetch records from committed snapshots ≤ latest, i.e. the crawl
@@ -230,6 +250,27 @@ object SnapshotStore {
   val SeenSchema: StructType = StructType(Seq(
     StructField("shard", IntegerType), StructField("bytes", BinaryType),
     StructField("inserts", LongType)))
+
+  /** A mutable state table: its directory under `v=K/` and its key. */
+  final case class Table(name: String, key: String)
+  val Frontier: Table = Table("frontier", "id")
+  val Hosts: Table = Table("hosts", "host")
+  val Seen: Table = Table("seen", "shard")
+
+  /** The full form of a change set: `prev` with every changed key's row
+    * replaced by its row in `changes`. A column only one side has (the
+    * optional `source`) is null on the other. */
+  private[graft] def replaceByKey(prev: DataFrame, changes: DataFrame, key: String): DataFrame =
+    prev.join(changes.select(key), Seq(key), "left_anti")
+      .unionByName(changes, allowMissingColumns = true)
+
+  /** The seen shards' changes for a commit, written concurrently with the
+    * other tables. After a full write, `afterFull` gets the table as
+    * written; a change set it returns (one that covers every shard, e.g. a
+    * rebuild at a larger capacity) is written in its place. It runs on a
+    * commit thread that is awaited before `metaLazy` is evaluated, so the
+    * manifest may carry what it computed. */
+  final case class SeenChanges(rows: DataFrame, afterFull: DataFrame => Option[DataFrame] = _ => None)
 
   /** One `"key":"value"` pair with escape-aware string bodies. */
   private[frontier] val pairRe = """"((?:[^"\\]|\\.)*)":"((?:[^"\\]|\\.)*)"""".r
@@ -291,9 +332,8 @@ object SnapshotStore {
   }
 
   /** Shared daemon pool for concurrent commit writes: 4 threads covers the
-    * frontier/hosts/results triple plus one caller-supplied unit (the seen-
-    * shard write); Spark's scheduler interleaves the resulting jobs across
-    * free executor slots. */
+    * frontier, hosts, results and seen-shard writes; Spark's scheduler
+    * interleaves the resulting jobs across free executor slots. */
   private[frontier] lazy val commitEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newFixedThreadPool(4, r => {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField,
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Bytes-native page parse (H1/H2) — the DRAM-bandwidth upgrade of the
-  * `parseUdf` hot path.
+  * parse-UDF route (`CrawlEngine.parseUdf`).
   *
   * The UDF route pays, per page: UTF8String → java.lang.String (UTF-16
   * decode, 2× the bytes written), `indexOf`/`substring`/unescape over the

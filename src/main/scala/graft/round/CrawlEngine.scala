@@ -46,10 +46,14 @@ object CrawlEngine {
   // projections inside WholeStageCodegen and skip the serialization round
   // trip on every row of the link-discovery path.
   import graft.functions.expressions.UrlFunctions.{urlNormalize, urlHost, urlPath, urlResolve}
-  /** Parser UDF from a pluggable [[PageParser]] (pipeline seam H1/H2). */
+  /** Parser UDF from a pluggable [[PageParser]] (pipeline seam H1/H2): a
+    * round parses through it when the crawl's parser is not
+    * [[DefaultParser]]. */
   def parseUdfOf(parser: PageParser) =
     udf((html: String, host: String) => parser.parse(html, host))
-  /** Default parser UDF (robots bodies + single-parser crawls). */
+  /** [[DefaultParser]] as a UDF. Rounds and robots bodies parse with the
+    * bytes-native `ParseFunctions.htmlParse`; this is the reference
+    * HtmlParseExprSpec compares that expression against. */
   val parseUdf = parseUdfOf(DefaultParser)
   val ioFailUntilUdf = udf((lang: String) => lang match {
     case IoLang(n) => n.toInt
@@ -338,17 +342,33 @@ object CrawlEngine {
   private def resourceCounter(meta: Map[String, String], kind: String, r: String): Long =
     meta.get(s"resource.$kind.$r").fold(0L)(_.toLong)
 
-  /** The v0 manifest of a bootstrap commit: full tables, no `source`
-    * column, seen shards iff `cfg.seenFilter`; `waits` = the v0 frontier's
-    * wait rows. */
+  /** The v0 manifest of a bootstrap commit: no `source` column, seen
+    * shards iff `cfg.seenFilter`; `waits` = the v0 frontier's wait rows.
+    * The store adds how it wrote each table. */
   def bootstrapMeta(nextId: Long, waits: Long, cfg: CrawlConfig): Map[String, String] =
     Map("nextRound" -> "0", "nextId" -> nextId.toString, "waits" -> waits.toString,
-      "schemaVersion" -> SchemaVersion,
-      "frontierFormat" -> "full", "frontierBase" -> "0", "frontierSource" -> "false",
-      "hostsFormat" -> "full", "hostsBase" -> "0") ++
-      (if (!cfg.seenFilter) Map.empty[String, String]
-       else Map("seenFormat" -> "full", "seenBase" -> "0",
-         "seenShards" -> cfg.seenShards.toString))
+      "schemaVersion" -> SchemaVersion, "frontierSource" -> "false") ++
+      (if (cfg.seenFilter) Map("seenShards" -> cfg.seenShards.toString) else Map.empty)
+
+  /** New frontier rows — seeds or discovered links, each with id, url,
+    * urlNorm, host, attempt, priority, discoveredRound, projectId and
+    * taskType — as the frontier stores them: the corpus capture `warcTs`
+    * (captured ONCE here, so ranking never re-touches the corpus; `rows`
+    * is the join's left side, so a join hint on it applies), the robots
+    * verdict (a `left` join on the per-host rules Dataset, never a driver
+    * map: Wait when allowed, else Skipped) and the columns of
+    * [[SnapshotStore.FrontierSchema]]. */
+  private def admitted(rows: DataFrame, corpusN: DataFrame, rulesDf: Option[DataFrame]): DataFrame = {
+    val captured = rows.join(corpusN.select(col("urlNorm"), col("warcTs")), Seq("urlNorm"), "left")
+    (rulesDf match {
+      case None => captured.withColumn("status", lit(TaskStatus.Wait))
+      case Some(rules) => captured
+        .join(rules, Seq("host"), "left")
+        .withColumn("status",
+          when(robotsAllowedUdf(urlPath(col("urlNorm")), col("rbAllow"), col("rbDisallow")),
+            TaskStatus.Wait).otherwise(TaskStatus.Skipped))
+    }).select(SnapshotStore.FrontierSchema.fieldNames.toSeq.map(col): _*)
+  }
 
   /** Bootstrap snapshot v=0 from a seed list. */
   def bootstrap(
@@ -369,31 +389,16 @@ object CrawlEngine {
       (i.toLong, raw, n, host, 0, prio, 0,
         cfg.projects.head.projectId, cfg.projects.head.taskType)
     }
-    val seedDf = rows.toDF("id", "url", "urlNorm", "host", "attempt", "priority",
-      "discoveredRound", "projectId", "taskType")
-    val withStatus = rulesDf match {
-      case None => seedDf.withColumn("status", lit(TaskStatus.Wait))
-      case Some(rules) => seedDf
-        .join(rules, Seq("host"), "left")
-        .withColumn("status",
-          when(robotsAllowedUdf(urlPath(col("urlNorm")), col("rbAllow"), col("rbDisallow")),
-            TaskStatus.Wait).otherwise(TaskStatus.Skipped))
-    }
-    val frontier0 = withStatus
-      .join(corpusN.select(col("urlNorm"), col("warcTs")), Seq("urlNorm"), "left")
-      .select(col("id"), col("url"), col("urlNorm"), col("host"), col("status"),
-        col("attempt"), col("priority"), col("warcTs"), col("discoveredRound"),
-        col("projectId"), col("taskType"))
+    val frontier0 = admitted(rows.toDF("id", "url", "urlNorm", "host", "attempt", "priority",
+      "discoveredRound", "projectId", "taskType"), corpusN, rulesDf)
     val hosts0 = Seq.empty[(String, Long, Int)].toDF("host", "nextTick", "failCount")
-    if (cfg.seenFilter) {
-      val seen0 = graft.seen.BloomShards.updateDf(
-        graft.seen.BloomShards.emptyDf(spark, cfg.seenShards, cfg.seenExpectedPerShard, cfg.seenFpp),
-        rows.map(_._3).toDF("urlNorm"), "urlNorm", cfg.seenShards)
-      store.writeSeen(0, seen0)
-    }
+    val seen0 =
+      if (!cfg.seenFilter) None
+      else Some(SnapshotStore.SeenChanges(graft.seen.BloomShards.buildDf(
+        rows.map(_._3).toDF("urlNorm"), "urlNorm", cfg.seenShards, cfg.seenExpectedPerShard, cfg.seenFpp)))
     val obs = org.apache.spark.sql.Observation("commit-v0")
     store.commit(0, frontier0.observe(obs, waitCount), hosts0, None,
-      bootstrapMeta(rows.size, observedLong(obs, "waits"), cfg))
+      bootstrapMeta(rows.size, observedLong(obs, "waits"), cfg), seen = seen0)
   }
 
   final case class RoundOutcome(selectedCount: Long, newLinkCount: Long)
@@ -581,13 +586,12 @@ object CrawlEngine {
       // key, which this commit re-stamps), merge into it only when the sink
       // is registered
       val carrySource = writeBack || frontier.columns.contains("source")
-      // merge-on-read layout: write only changed rows this round, unless this
-      // commit is a compaction point (periodic full rewrite bounds the
-      // read-side merge fan-in). The same cadence governs all three state
-      // tables (frontier, hosts, seen shards): per-round write cost ∝ round
-      // work, never ∝ total state size (round-2 scale-killers A+B).
-      val deltaMode = cfg.frontierLayout == "delta" &&
-        (version + 1) % math.max(cfg.frontierCompactEvery, 1) != 0
+      // the round hands the store only its changes; the layout is the
+      // store's compaction cadence for all three state tables: "full"
+      // compacts every commit, "delta" every frontierCompactEvery-th (the
+      // periodic full write bounds the read-side merge fan-in)
+      val compact = cfg.frontierLayout == "full" ||
+        (version + 1) % math.max(cfg.frontierCompactEvery, 1) == 0
       // lease multiplexing: one seeded-pick task type per round — the
       // deterministic twin of the master's random pick among registered
       // types (`QueueTaskServiceImpl.scala:32-55`)
@@ -732,14 +736,19 @@ object CrawlEngine {
           s"snapshot seen set has $persistedShards shards but cfg.seenShards=" +
             s"${cfg.seenShards} — resuming would corrupt the URL-seen membership")
       }
+      // the EFFECTIVE shard capacity: an earlier auto-resize persisted its
+      // choice in the manifest; otherwise the configured sizing applies
+      val effCapacity = meta0.get("seenExpectedPerShard").map(_.toLong)
+        .getOrElse(cfg.seenExpectedPerShard)
+      def shardsOf(keys: DataFrame, capacity: Long): DataFrame =
+        graft.seen.BloomShards.buildDf(keys, "urlNorm", cfg.seenShards, capacity, cfg.seenFpp)
       val seenShards =
         if (!cfg.seenFilter) None
         else Some(
           if (seenOnDisk) store.readSeen(version)
           else // the previous round ran without the seen filter (a resume
             // that turns it on): build the shards from the frontier
-            graft.seen.BloomShards.buildDf(frontier.select("urlNorm"), "urlNorm",
-              cfg.seenShards, cfg.seenExpectedPerShard, cfg.seenFpp))
+            shardsOf(frontier.select("urlNorm"), effCapacity))
       // (anti-joins hinted shuffle_hash for the same no-re-sort reason)
       val seenSet = frontier.select(col("urlNorm").as("newNorm")).hint("shuffle_hash")
       val newLinks = seenShards match {
@@ -753,10 +762,6 @@ object CrawlEngine {
       val (newRanked, newRankedCache, _) =
         withGlobalSeq(newLinks, Seq(col("seq"), col("pos")), parts, "idx")
       caches += newRankedCache
-      // robots verdict via a left join on the per-host rules Dataset (never a
-      // driver map): new links per round × tiny-or-sharded rules — AQE
-      // broadcasts small rule tables, shuffles huge ones, either way the
-      // driver holds nothing
       // project chaining (task.proto:13-15): a link discovered by a task of
       // project P enters the frontier under P.nextProjectId with that
       // project's task type; unknown parents keep their own project.
@@ -774,20 +779,10 @@ object CrawlEngine {
         .withColumn("taskType",
           coalesce(element_at(typeByProject, col("projectId")),
             lit(cfg.projects.head.taskType)))
-      val discovered = persisted((rulesDf match {
-        case None => newBase.withColumn("status", lit(TaskStatus.Wait))
-        case Some(rules) => newBase
-          .join(rules, Seq("host"), "left")
-          .withColumn("status",
-            when(robotsAllowedUdf(urlPath(col("urlNorm")), col("rbAllow"), col("rbDisallow")),
-              TaskStatus.Wait).otherwise(TaskStatus.Skipped))
-      })
-        .hint("shuffle_hash") // build on the new-link side, never sort the corpus
-        .join(corpusN.select(col("urlNorm"), col("warcTs")), Seq("urlNorm"), "left")
-        .select((Seq(col("id"), col("url"), col("urlNorm"), col("host"), col("status"),
-          col("attempt"), col("priority"), col("warcTs"), col("discoveredRound"),
-          col("projectId"), col("taskType")) ++
-          (if (carrySource) Seq(lit(null).cast("string").as("source")) else Nil)): _*))
+      // build the capture join's hash on the new-link side: never sort or
+      // move the corpus
+      val discovered = persisted(admitted(newBase.hint("shuffle_hash"), corpusN, rulesDf)
+        .transform(df => if (carrySource) df.withColumn("source", lit(null).cast("string")) else df))
 
       // G2/G3 + D1: status machine via outcome join on id. No broadcast
       // hint: outcomes is ≤ roundBudget rows — forcing a broadcast made the
@@ -807,27 +802,22 @@ object CrawlEngine {
         if (carrySource && !frontier.columns.contains("source"))
           frontier.withColumn("source", lit(null).cast("string"))
         else frontier
-      // delta commits keep ONLY the rows this round touched (inner join);
-      // full commits rewrite everything (left join) — same rewrite exprs
-      val updated = frontierForUpdate
-        .join(outcomes, Seq("id"), if (deltaMode) "inner" else "left")
-        .withColumn("newAttempt",
+      // the rows this round touched: its leased rows with their new status
+      val touched = frontierForUpdate
+        .join(outcomes, Seq("id"), "inner")
+        .withColumn("attempt",
           when(col("outcome") === Outcome.GenericFailed, col("attempt") + 1)
             .otherwise(col("attempt")))
-        .withColumn("newStatus",
-          when(col("outcome").isNull, col("status"))
-            .when(col("outcome").isin(Outcome.Success, Outcome.Banned), TaskStatus.Finished)
+        .withColumn("status",
+          when(col("outcome").isin(Outcome.Success, Outcome.Banned), TaskStatus.Finished)
             .when(col("outcome").isin(Outcome.NotFound, Outcome.Skipped), TaskStatus.Skipped)
             .when(col("outcome") === Outcome.ParsingFailed, TaskStatus.ParsingFailed)
             .when(col("outcome") === Outcome.IoFailed, TaskStatus.Wait)
             .when(col("outcome") === Outcome.GenericFailed,
-              when(col("newAttempt") >= cfg.maxAttempts, TaskStatus.Failed)
+              when(col("attempt") >= cfg.maxAttempts, TaskStatus.Failed)
                 .otherwise(TaskStatus.Wait))
             .otherwise(col("status")))
-        .select((Seq(col("id"), col("url"), col("urlNorm"), col("host"),
-          col("newStatus").as("status"), col("newAttempt").cast("int").as("attempt"),
-          col("priority"), col("warcTs"), col("discoveredRound"),
-          col("projectId"), col("taskType")) ++
+        .select((SnapshotStore.FrontierSchema.fieldNames.toSeq.map(col) ++
           // write-back: a success this round overwrites source; every other
           // row keeps what it had (null until its first successful fetch).
           // Sink absent but column present: carry it through untouched.
@@ -840,7 +830,7 @@ object CrawlEngine {
       // separate discovered.count() job (new rows are exactly those tagged
       // discoveredRound == round+1)
       val obs = org.apache.spark.sql.Observation(s"commit-v${version + 1}")
-      val frontier2 = updated.unionByName(discovered)
+      val frontierChanges = touched.unionByName(discovered)
         .observe(obs, waitCount,
           sum(when(col("discoveredRound") === round + 1, 1L).otherwise(0L)).as("newLinks"))
 
@@ -866,28 +856,24 @@ object CrawlEngine {
                 cfg.politenessCenterTicks, cfg.politenessRadiusTicks),
               coalesce(col("rbDelayTicks"), lit(0L)))))
         .select(col("host"), col("newTick"), col("nFails"))
-      // full commit: every host row re-materialized (the merged view), a
-      // full outer join. delta commit: ONLY hosts this round touched — the
-      // old failCount rides a right join (touched side preserved, so
-      // newTick is never null), untouched hosts stay on disk and the
-      // snapshot layer keeps-latest-by-host at read time (round-2
-      // scale-killer B: at 10^8 hosts the full-outer rewrite was a
-      // frontier-sized write per round).
-      val hosts2 = hosts.join(hostUpdates, Seq("host"), if (deltaMode) "right" else "full_outer")
-        .withColumn("failCount2",
-          (coalesce(col("failCount"), lit(0)) + coalesce(col("nFails"), lit(0))).cast("int"))
+      // only the hosts this round touched: the old failCount rides a right
+      // join (touched side preserved, so newTick is never null); untouched
+      // hosts stay as they are (round-2 scale-killer B: at 10^8 hosts a
+      // full-outer rewrite was a frontier-sized write per round)
+      val hostChanges = hosts.join(hostUpdates, Seq("host"), "right")
+        .withColumn("failCount2", (coalesce(col("failCount"), lit(0)) + col("nFails")).cast("int"))
         .select(col("host"),
           when(lit(cfg.maxHostFailures > 0) && col("failCount2") >= cfg.maxHostFailures,
             lit(DeadTick))
-            .otherwise(coalesce(col("newTick"), col("nextTick"))).as("nextTick"),
+            .otherwise(col("newTick")).as("nextTick"),
           col("failCount2").as("failCount"))
 
       // R7 shard update: cogroup on shard id — network cost ∝ new links +
       // touched shard bytes, driver cost zero; persisted with the snapshot
-      // (the URL-seen set resumes exactly with the frontier)
-      // a rebuilt (not-on-disk) seen set has no persisted base to merge
-      // deltas onto — its first write must be full regardless of layout
-      val seenDelta = deltaMode && seenOnDisk
+      // (the URL-seen set resumes exactly with the frontier). A rebuilt
+      // (not-on-disk) seen set covers every shard.
+      val newKeys = discovered.select("urlNorm")
+      val allKeys = frontier.select("urlNorm").unionByName(newKeys)
       // bloom-shard saturation signal (round-3 VERDICT item 8): a filter
       // sized for seenExpectedPerShard keys degrades FPP silently past
       // capacity — membership stays exact (the anti-join confirms) but the
@@ -898,54 +884,47 @@ object CrawlEngine {
       // writes (compaction cadence) so the delta path's per-round driver job
       // count stays flat — a fixed serial term per round is exactly what the
       // N→4N scaling criterion punishes.
-      // the EFFECTIVE shard capacity: an earlier auto-resize persisted its
-      // choice in the manifest; otherwise the configured sizing applies
-      val effCapacity = meta0.get("seenExpectedPerShard").map(_.toLong)
-        .getOrElse(cfg.seenExpectedPerShard)
       var seenSaturation: Option[(Long, Double)] = None
       var seenCapacityOut = effCapacity
-      // reported on this thread once the commit returns (the unit runs on a
+      // reported on this thread once the commit returns (the check runs on a
       // commit thread; notifiers need not be thread-safe)
       var seenWarning: Option[String] = None
-      // the seen-shard update runs as a CONCURRENT commit unit (passed to
-      // store.commit below): its cogroup job overlaps the frontier/hosts/
-      // results writes instead of serializing in front of them, and the
-      // manifest still seals only after it completes (Await gives the
-      // happens-before edge for the saturation vars the metaLazy reads).
-      val seenWriteUnit: Option[() => Unit] = seenShards.map { shardsDf => () =>
-        val newKeys = discovered.select("urlNorm")
-        val seen2 =
-          if (seenDelta) // touched shards only; merge-on-read fills the rest
-            graft.seen.BloomShards.updateTouchedDf(shardsDf, newKeys, "urlNorm", cfg.seenShards)
-          else graft.seen.BloomShards.updateDf(shardsDf, newKeys, "urlNorm", cfg.seenShards)
-        store.writeSeen(version + 1, seen2)
-        if (!seenDelta) {
-          val maxIns = store.readSeen(version + 1).agg(max(col("inserts"))).head().getLong(0)
-          var ratio = maxIns.toDouble / math.max(effCapacity, 1L)
-          if (ratio >= 1.0) {
-            // auto-resize at the compaction point: rebuild every shard from
-            // the full key set (previous frontier ∪ this round's discovered)
-            // with capacity = next power of two ≥ 2× the fullest shard.
-            // Membership is EXACT before and after (bloom is a pre-filter;
-            // the anti-join confirms) — only the FPP, i.e. the volume of
-            // confirm traffic, improves. O(frontier) cost, but only at the
-            // compaction cadence that already writes every shard.
-            val newCap = java.lang.Long.highestOneBit(math.max(2 * maxIns, 2L) - 1) * 2
-            seenWarning = Some(s"[graft] seen-shard saturation: fullest shard " +
-              s"$maxIns ≥ capacity $effCapacity — rebuilding all ${cfg.seenShards} " +
-              s"shards at expectedPerShard=$newCap (compaction auto-resize)")
-            val allKeys = frontier.select("urlNorm").unionByName(newKeys)
-            val rebuilt = graft.seen.BloomShards.buildDf(
-              allKeys, "urlNorm", cfg.seenShards, newCap, cfg.seenFpp)
-            store.writeSeen(version + 1, rebuilt)
-            seenCapacityOut = newCap
-            ratio = maxIns.toDouble / newCap
-          } else if (ratio >= 0.9)
+      // the store writes the seen changes CONCURRENTLY with the frontier/
+      // hosts/results writes and seals the manifest only after the check
+      // (Await gives the happens-before edge for the vars metaLazy reads)
+      def saturationCheck(written: DataFrame): Option[DataFrame] = {
+        val maxIns = written.agg(max(col("inserts"))).head().getLong(0)
+        val ratio = maxIns.toDouble / math.max(effCapacity, 1L)
+        seenSaturation = Some((maxIns, ratio))
+        if (ratio >= 1.0) {
+          // auto-resize at the compaction point: rebuild every shard from
+          // the full key set (previous frontier ∪ this round's discovered)
+          // with capacity = next power of two ≥ 2× the fullest shard.
+          // Membership is EXACT before and after (bloom is a pre-filter;
+          // the anti-join confirms) — only the FPP, i.e. the volume of
+          // confirm traffic, improves. O(frontier) cost, but only at the
+          // compaction cadence that already writes every shard.
+          val newCap = java.lang.Long.highestOneBit(math.max(2 * maxIns, 2L) - 1) * 2
+          seenWarning = Some(s"[graft] seen-shard saturation: fullest shard " +
+            s"$maxIns ≥ capacity $effCapacity — rebuilding all ${cfg.seenShards} " +
+            s"shards at expectedPerShard=$newCap (compaction auto-resize)")
+          seenCapacityOut = newCap
+          seenSaturation = Some((maxIns, maxIns.toDouble / newCap))
+          Some(shardsOf(allKeys, newCap))
+        } else {
+          if (ratio >= 0.9)
             seenWarning = Some(f"[graft] seen-shard saturation: fullest shard at " +
               f"$maxIns inserts = ${ratio * 100}%.0f%% of capacity $effCapacity — " +
               f"auto-resize will trigger at the compaction after it crosses 100%%")
-          seenSaturation = Some((maxIns, ratio))
+          None
         }
+      }
+      val seenChanges = seenShards.map { shardsDf =>
+        SnapshotStore.SeenChanges(
+          if (seenOnDisk)
+            graft.seen.BloomShards.updateTouchedDf(shardsDf, newKeys, "urlNorm", cfg.seenShards)
+          else shardsOf(allKeys, effCapacity),
+          saturationCheck)
       }
       // A8-A13 sink family: raw + parsed sinks write BEFORE the manifest
       // seals (reference order: SaveCrawlResultController saves, THEN reports
@@ -959,7 +938,7 @@ object CrawlEngine {
       hooks.parsedSinks.foreach(_.write(records, version + 1))
       // meta is by-name: evaluated inside commit AFTER the frontier write,
       // when the observation metrics exist
-      store.commit(version + 1, frontier2, hosts2, Some(records), {
+      store.commit(version + 1, frontierChanges, hostChanges, Some(records), {
         val ocLong = recObs.get.collect { case (k, v: java.lang.Long) => k -> v.longValue }
         val outcomeCounts = ocLong.map { case (k, v) => s"outcome.$k" -> v.toString }
         // A5 + pool breaker: the batch's acquisition and its fetch failures
@@ -972,13 +951,10 @@ object CrawlEngine {
           Seq(charged("used", 1L), charged("fails", failInc))
         }.toMap + ("resource" -> resource)
         val newLinks = observedLong(obs, "newLinks")
-        // full commit: the observation saw the whole frontier. Delta commit:
-        // it saw only touched rows — every selected row left the wait pool
-        // and re-entered iff its delta row is Wait, untouched waits carried
-        // over.
-        val waits =
-          if (deltaMode) meta0("waits").toLong - selectedCount + observedLong(obs, "waits")
-          else observedLong(obs, "waits")
+        // every selected row left the wait pool; the observation saw the
+        // changes only, so it counts the ones that re-entered it and the
+        // discovered waits; untouched waits carry over
+        val waits = meta0("waits").toLong - selectedCount + observedLong(obs, "waits")
         Map("nextRound" -> (round + 1).toString,
           "round" -> round.toString,
           "nextId" -> (nextId + newLinks).toString,
@@ -986,15 +962,9 @@ object CrawlEngine {
           "selected" -> selectedCount.toString,
           "newLinks" -> newLinks.toString,
           "schemaVersion" -> SchemaVersion,
-          "frontierFormat" -> (if (deltaMode) "delta" else "full"),
-          "frontierBase" -> (if (deltaMode) meta0("frontierBase") else (version + 1).toString),
-          "frontierSource" -> carrySource.toString,
-          "hostsFormat" -> (if (deltaMode) "delta" else "full"),
-          "hostsBase" -> (if (deltaMode) meta0("hostsBase") else (version + 1).toString)) ++
+          "frontierSource" -> carrySource.toString) ++
           (if (seenShards.isEmpty) Map.empty[String, String]
            else Map(
-             "seenFormat" -> (if (seenDelta) "delta" else "full"),
-             "seenBase" -> (if (seenDelta) meta0("seenBase") else (version + 1).toString),
              "seenShards" -> cfg.seenShards.toString,
              // effective per-shard capacity (auto-resize persists its pick)
              "seenExpectedPerShard" -> seenCapacityOut.toString)) ++
@@ -1002,7 +972,7 @@ object CrawlEngine {
             Map("seenMaxShardInserts" -> ins.toString,
               "seenFillRatio" -> f"$ratio%.4f")
           } ++ resourceMeta ++ outcomeCounts
-      }, concurrent = seenWriteUnit)
+      }, compact, seenChanges)
       seenWarning.foreach { w =>
         System.err.println(w)
         hooks.notifiers.foreach(_.onWarning(w))
@@ -1115,7 +1085,8 @@ object CrawlEngine {
       rulesDf.foreach(_.unpersist(blocking = true))
       if (cfg.corpusStaging != "bucketed") corpusN.unpersist()
     }
-    val summary = CrawlSummary(round, version, fetches, store.readFrontier(version).count())
+    // ids are dense: the latest manifest's nextId is the frontier's row count
+    val summary = CrawlSummary(round, version, fetches, store.readMeta(version)("nextId").toLong)
     // notification seam (NotificationExecutor analog): surface the stop —
     // most importantly the D3 NoResourcesAvailable — to registered hooks
     hooks.notifiers.foreach(_.onStop(stopReason, summary))

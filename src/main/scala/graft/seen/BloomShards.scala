@@ -60,15 +60,6 @@ object BloomShards {
       (col("inserts").cast("double") / lit(math.max(expectedPerShard, 1L).toDouble))
         .as("fillRatio"))
 
-  /** Insert `newKeys` into a shard Dataset: keys shuffle to their shard,
-    * each touched shard deserializes once, inserts its keys, re-serializes;
-    * untouched shards pass through byte-for-byte (the cogroup is full-outer
-    * on shard id). Throws if a key's shard row is missing — a truncated
-    * snapshot must never silently shrink the probe modulus. */
-  def updateDf(shards: DataFrame, newKeys: DataFrame, keyCol: String, nShards: Int): DataFrame =
-    cogroupKeys(shards, newKeys, keyCol, nShards)((sid, bs, ks) =>
-      Iterator.single(insertKeys(sid, bs, ks)))
-
   /** `newKeys` grouped by shard, cogrouped with the shard rows: `f` gets a
     * shard id, its snapshot rows and its keys, and emits the shard rows to
     * write. */
@@ -104,26 +95,28 @@ object BloomShards {
     }
   }
 
-  /** Like [[updateDf]] but emits ONLY the shards that received at least
-    * one new key — the delta-commit write set (round-2 scale-killer A: a
-    * full rewrite of every shard's bytes per round is ~12 GB of parquet at
-    * 10^10 URLs @1% FPP no matter how few shards changed). Untouched
-    * shards are neither read nor rewritten; the snapshot layer merges
-    * keep-latest-by-shard over base..v on read, so the probe modulus never
-    * shrinks (a missing shard row still fails loudly at merge time via
-    * [[updateDf]]/[[probeFlagsDf]] existence checks). */
+  /** Insert `newKeys` into a shard Dataset, emitting ONLY the shards that
+    * received at least one key — a commit's change set (round-2
+    * scale-killer A: a full rewrite of every shard's bytes per round is
+    * ~12 GB of parquet at 10^10 URLs @1% FPP no matter how few shards
+    * changed). Keys shuffle to their shard; each touched shard
+    * deserializes once, inserts its keys, re-serializes. Untouched shards
+    * are neither read nor rewritten: the snapshot layer keeps the newest
+    * row per shard, so the probe modulus never shrinks. Throws if a key's
+    * shard row is missing — a truncated snapshot must never silently
+    * shrink the probe modulus. */
   def updateTouchedDf(shards: DataFrame, newKeys: DataFrame, keyCol: String,
                       nShards: Int): DataFrame =
     cogroupKeys(shards, newKeys, keyCol, nShards) { (sid, bs, ks) =>
-      // untouched: pass-through is implicit in merge-on-read
       if (ks.isEmpty) Iterator.empty else Iterator.single(insertKeys(sid, bs, ks))
     }
 
-  /** Build a shard Dataset from scratch over a key column. */
+  /** Build a shard Dataset from scratch over a key column: every shard,
+    * keyless ones empty (the cogroup is full-outer on shard id). */
   def buildDf(keys: DataFrame, keyCol: String, nShards: Int,
               expectedPerShard: Long = 1L << 16, fpp: Double = 0.01): DataFrame =
-    updateDf(emptyDf(keys.sparkSession, nShards, expectedPerShard, fpp),
-      keys, keyCol, nShards)
+    cogroupKeys(emptyDf(keys.sparkSession, nShards, expectedPerShard, fpp), keys, keyCol, nShards)(
+      (sid, bs, ks) => Iterator.single(insertKeys(sid, bs, ks)))
 
   /** Distributed probe: (key as string, maybe) for every non-null key row
     * of `keys`. Keys shuffle to their shard's cogroup group; each group

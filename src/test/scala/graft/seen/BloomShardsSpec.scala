@@ -3,6 +3,7 @@ package graft.seen
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
+import graft.frontier.SnapshotStore
 
 class BloomShardsSpec extends AnyFunSuite with SparkSpec {
 
@@ -47,9 +48,10 @@ class BloomShardsSpec extends AnyFunSuite with SparkSpec {
     // no false negatives through the cogroup probe
     val probeAll = BloomShards.probeFlagsDf(keys.toDF("k"), "k", shardsDf, n)
     assert(probeAll.filter(not(col("maybe"))).count() == 0, "distributed bloom false negative")
-    // incremental update keeps old + new members
+    // incremental update (touched shards replacing theirs) keeps old + new members
     val more = (0 until 500).map(i => s"new$i")
-    val shards2 = BloomShards.updateDf(shardsDf, more.toDF("k"), "k", n)
+    val shards2 = SnapshotStore.replaceByKey(shardsDf,
+      BloomShards.updateTouchedDf(shardsDf, more.toDF("k"), "k", n), "shard")
     assert(BloomShards.probeFlagsDf((keys ++ more).toDF("k"), "k", shards2, n)
       .filter(not(col("maybe"))).count() == 0)
   }
@@ -73,15 +75,14 @@ class BloomShardsSpec extends AnyFunSuite with SparkSpec {
     val newKeys = Seq("zz-new-key-1").toDF("k") // one key → exactly one touched shard
     val touched = BloomShards.updateTouchedDf(base, newKeys, "k", n)
     assert(touched.count() == 1, "delta write set must contain only the touched shard")
-    // merge-on-read semantics: touched rows override, untouched come from base
-    val merged = touched.unionByName(
-      base.join(touched.select("shard"), Seq("shard"), "left_anti"))
+    // the store's full form: touched rows override, untouched come from base
+    val merged = SnapshotStore.replaceByKey(base, touched, "shard")
     assert(merged.count() == n)
     val all = ((0 until 1000).map(i => s"u$i") :+ "zz-new-key-1").toDF("k")
     assert(BloomShards.probeFlagsDf(all, "k", merged, n)
       .filter(not(col("maybe"))).count() == 0, "merged delta view has a false negative")
-    // bit-parity with the full-update path on an arbitrary probe set
-    val full = BloomShards.updateDf(base, newKeys, "k", n)
+    // bit-parity with shards built from every key, on an arbitrary probe set
+    val full = BloomShards.buildDf(all, "k", n, expectedPerShard = 1024)
     val probes = (0 until 3000 by 3).map(i => s"p$i").toDF("k")
     val a = BloomShards.probeFlagsDf(probes, "k", merged, n)
       .as[(String, Boolean)].collect().toMap
@@ -129,8 +130,9 @@ class BloomShardsSpec extends AnyFunSuite with SparkSpec {
     // fresh shards report zero inserts
     assert(BloomShards.saturationDf(empty, cap)
       .agg(max(col("inserts"))).head().getLong(0) == 0L)
-    val s1 = BloomShards.updateDf(empty, (0 until 100).map(i => s"u$i").toDF("k"), "k", n)
-    val s2 = BloomShards.updateDf(s1, (100 until 400).map(i => s"u$i").toDF("k"), "k", n)
+    val s1 = BloomShards.buildDf((0 until 100).map(i => s"u$i").toDF("k"), "k", n, expectedPerShard = cap)
+    val s2 = SnapshotStore.replaceByKey(s1,
+      BloomShards.updateTouchedDf(s1, (100 until 400).map(i => s"u$i").toDF("k"), "k", n), "shard")
     val sat = BloomShards.saturationDf(s2, cap)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(3)))
     // counters accumulate across updates: 400 keys total across 4 shards
