@@ -69,11 +69,11 @@ object Bench {
       seenExpectedPerShard = math.max(1L << 16, 2L * nPages / 16))
     val seen0 =
       if (!seenFilter) None
-      else Some(SnapshotStore.SeenChanges(graft.seen.BloomShards.buildDf(
+      else Some(SnapshotStore.SeenChanges(SnapshotStore.Changes(graft.seen.BloomShards.buildDf(
         frontier0.select("urlNorm"), "urlNorm", cfg.seenShards,
-        cfg.seenExpectedPerShard, cfg.seenFpp)))
-    store.commit(0, frontier0, hosts0, None, CrawlEngine.bootstrapMeta(nPages, waits = nPages, cfg),
-      seen = seen0)
+        cfg.seenExpectedPerShard, cfg.seenFpp))))
+    store.commit(0, SnapshotStore.Changes(frontier0), SnapshotStore.Changes(hosts0), None,
+      CrawlEngine.bootstrapMeta(nPages, waits = nPages, cfg), seen = seen0)
     val rules: Option[org.apache.spark.sql.DataFrame] = None // bench corpus serves no robots.txt
     onBootstrapDone()
     val out = Vector.newBuilder[(Long, Double)]

@@ -151,8 +151,9 @@ case class CrawlConfig(
     // time (Iceberg merge-on-read), or compacts: writes the merged view.
     // "full" = compaction every commit (write cost ∝ state size — fine
     // locally, impossible at 10^10 rows/round); "delta" = compaction every
-    // `frontierCompactEvery` commits, bounding the read-side merge fan-in.
-    // Crawl output is bit-identical either way (CrawlEngineSpec pins it).
+    // `frontierCompactEvery` commits, bounding the read-side merge fan-in;
+    // any other value is refused. Crawl output is bit-identical either way
+    // (CrawlEngineSpec pins it).
     frontierLayout: String = "full",
     frontierCompactEvery: Int = 8,
     maxRounds: Int = 64,
@@ -183,4 +184,8 @@ case class CrawlConfig(
     s"CrawlConfig.resources ids must be non-empty and free of control characters: $resources")
   require(resources.distinct == resources,
     s"CrawlConfig.resources ids must be distinct: $resources")
+  // a layout typo (CrawlJob reads GRAFT_LAYOUT unchecked) must not silently
+  // pick a compaction cadence
+  require(frontierLayout == "full" || frontierLayout == "delta",
+    s"CrawlConfig.frontierLayout must be \"full\" or \"delta\": $frontierLayout")
 }

@@ -41,10 +41,11 @@ import org.apache.spark.sql.types._
   *    ∝ state size (at 10^10 URLs the seen shards alone are ~12 GB of
   *    parquet that a full rewrite pays every round);
   *  - full (compaction): the previous version's merged view with the
-  *    changed keys replaced, `prev ⋉̸ changes.key ∪ changes`. A table is
-  *    written full at a compaction point (the caller's cadence) or when the
-  *    previous version has no such table (v0; the seen shards of a resume
-  *    that turns the filter on).
+  *    changed keys replaced, `prev ⋉̸ keys ∪ rows` (the caller may give the
+  *    keys from a cheaper plan than the rows, [[SnapshotStore.Changes]]).
+  *    A table is written full at a compaction point (the caller's cadence)
+  *    or when the previous version has no such table (v0; the seen shards
+  *    of a resume that turns the filter on).
   * The store stamps how it wrote each table in the manifest
   * (`<table>Format` = full | delta, `<table>Base` = the newest full
   * version), and reads follow those keys.
@@ -65,7 +66,7 @@ import org.apache.spark.sql.types._
   * an uninterrupted one.
   */
 final class SnapshotStore(val baseDir: String, spark: SparkSession) {
-  import SnapshotStore.{Frontier, Hosts, Seen, SeenChanges, Table}
+  import SnapshotStore.{Changes, Frontier, Hosts, Seen, SeenChanges, Table}
 
   private def dir(v: Int, part: String): String = s"$baseDir/v=$v/$part"
   private def manifestPath(v: Int): Path = Paths.get(s"$baseDir/manifest-$v.json")
@@ -91,8 +92,8 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
     * was written. */
   def commit(
       v: Int,
-      frontier: DataFrame,
-      hosts: DataFrame,
+      frontier: Changes,
+      hosts: Changes,
       results: Option[DataFrame],
       metaLazy: => Map[String, String],
       compact: Boolean = false,
@@ -104,13 +105,11 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
     val bases = (Seq(Frontier, Hosts) ++ seen.map(_ => Seen)).map { t =>
       t -> prev.get(s"${t.name}Base").filter(_ => !compact).fold(v)(_.toInt)
     }.toMap
-    // the full form reads `changes` twice (keys and rows); an Observation
-    // on it still reports each row once: both occurrences see the same rows
-    def write(t: Table, changes: DataFrame): Unit = {
+    def write(t: Table, changes: Changes): Unit = {
       val rows =
         if (bases(t) == v && prev.contains(s"${t.name}Base"))
           SnapshotStore.replaceByKey(readTable(t, v - 1, prev), changes, t.key)
-        else changes
+        else changes.rows
       rows.write.mode("overwrite").parquet(dir(v, t.name))
     }
     // write-audit-publish: data first (overwrite any orphan), manifest last.
@@ -142,10 +141,11 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
           Future(write(Hosts, hosts)) ::
           results.map(r => Future(r.write.mode("overwrite").parquet(resultsDir(v)))).toList :::
           seen.map(s => Future {
-            write(Seen, s.rows)
+            write(Seen, s.changes)
+            // a table afterFull returns covers every shard: written as is
             if (bases(Seen) == v)
               s.afterFull(spark.read.schema(SnapshotStore.SeenSchema).parquet(dir(v, Seen.name)))
-                .foreach(write(Seen, _))
+                .foreach(_.write.mode("overwrite").parquet(dir(v, Seen.name)))
           }).toList
       val failures = writes.flatMap(w => Await.ready(w, Duration.Inf).value.collect {
         case Failure(e) => e
@@ -257,20 +257,31 @@ object SnapshotStore {
   val Hosts: Table = Table("hosts", "host")
   val Seen: Table = Table("seen", "shard")
 
+  /** One state table's changes for a commit: the rows to write, and the
+    * keys they replace, `keys` (default: the rows' own keys). The full
+    * write reads the keys and the rows separately; a caller whose rows are
+    * costly to evaluate (the frontier's touched rows join the previous
+    * frontier) passes the same keys from a cheaper plan, so the rows are
+    * evaluated once — and an Observation on them counts each row once.
+    * `keys` must cover every key of `rows` that the previous version may
+    * hold, and hold no key that `rows` lacks. */
+  final case class Changes(rows: DataFrame, keys: Option[DataFrame] = None)
+
   /** The full form of a change set: `prev` with every changed key's row
-    * replaced by its row in `changes`. A column only one side has (the
-    * optional `source`) is null on the other. */
-  private[graft] def replaceByKey(prev: DataFrame, changes: DataFrame, key: String): DataFrame =
-    prev.join(changes.select(key), Seq(key), "left_anti")
-      .unionByName(changes, allowMissingColumns = true)
+    * replaced by its row in `changes`, `prev ⋉̸ keys ∪ rows`. A column only
+    * one side has (the optional `source`) is null on the other. */
+  private[graft] def replaceByKey(prev: DataFrame, changes: Changes, key: String): DataFrame =
+    prev.join(changes.keys.getOrElse(changes.rows).select(key), Seq(key), "left_anti")
+      .unionByName(changes.rows, allowMissingColumns = true)
 
   /** The seen shards' changes for a commit, written concurrently with the
     * other tables. After a full write, `afterFull` gets the table as
-    * written; a change set it returns (one that covers every shard, e.g. a
+    * written; a table it returns (one that covers every shard, e.g. a
     * rebuild at a larger capacity) is written in its place. It runs on a
     * commit thread that is awaited before `metaLazy` is evaluated, so the
     * manifest may carry what it computed. */
-  final case class SeenChanges(rows: DataFrame, afterFull: DataFrame => Option[DataFrame] = _ => None)
+  final case class SeenChanges(changes: Changes,
+                               afterFull: DataFrame => Option[DataFrame] = _ => None)
 
   /** One `"key":"value"` pair with escape-aware string bodies. */
   private[frontier] val pairRe = """"((?:[^"\\]|\\.)*)":"((?:[^"\\]|\\.)*)"""".r

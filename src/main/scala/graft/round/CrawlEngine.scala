@@ -394,10 +394,12 @@ object CrawlEngine {
     val hosts0 = Seq.empty[(String, Long, Int)].toDF("host", "nextTick", "failCount")
     val seen0 =
       if (!cfg.seenFilter) None
-      else Some(SnapshotStore.SeenChanges(graft.seen.BloomShards.buildDf(
-        rows.map(_._3).toDF("urlNorm"), "urlNorm", cfg.seenShards, cfg.seenExpectedPerShard, cfg.seenFpp)))
+      else Some(SnapshotStore.SeenChanges(SnapshotStore.Changes(graft.seen.BloomShards.buildDf(
+        rows.map(_._3).toDF("urlNorm"), "urlNorm", cfg.seenShards, cfg.seenExpectedPerShard,
+        cfg.seenFpp))))
     val obs = org.apache.spark.sql.Observation("commit-v0")
-    store.commit(0, frontier0.observe(obs, waitCount), hosts0, None,
+    store.commit(0, SnapshotStore.Changes(frontier0.observe(obs, waitCount)),
+      SnapshotStore.Changes(hosts0), None,
       bootstrapMeta(rows.size, observedLong(obs, "waits"), cfg), seen = seen0)
   }
 
@@ -747,8 +749,9 @@ object CrawlEngine {
         else Some(
           if (seenOnDisk) store.readSeen(version)
           else // the previous round ran without the seen filter (a resume
-            // that turns it on): build the shards from the frontier
-            shardsOf(frontier.select("urlNorm"), effCapacity))
+            // that turns it on): build the shards from the frontier, once
+            // for the probe and the commit
+            persisted(shardsOf(frontier.select("urlNorm"), effCapacity)))
       // (anti-joins hinted shuffle_hash for the same no-re-sort reason)
       val seenSet = frontier.select(col("urlNorm").as("newNorm")).hint("shuffle_hash")
       val newLinks = seenShards match {
@@ -830,9 +833,14 @@ object CrawlEngine {
       // separate discovered.count() job (new rows are exactly those tagged
       // discoveredRound == round+1)
       val obs = org.apache.spark.sql.Observation(s"commit-v${version + 1}")
-      val frontierChanges = touched.unionByName(discovered)
-        .observe(obs, waitCount,
-          sum(when(col("discoveredRound") === round + 1, 1L).otherwise(0L)).as("newLinks"))
+      // the keys a compaction replaces come from the fetched cache, apart
+      // from the rows (which join the previous frontier): the leased ids.
+      // Discovered ids are new (≥ nextId), so no earlier version holds them.
+      val frontierChanges = SnapshotStore.Changes(
+        touched.unionByName(discovered)
+          .observe(obs, waitCount,
+            sum(when(col("discoveredRound") === round + 1, 1L).otherwise(0L)).as("newLinks")),
+        Some(fetched.select("id")))
 
       // F2/F3 host-state rewrite + D3 failCount circuit breaker: fetch
       // failures (io + generic) accumulate per host; at the cap the host is
@@ -860,20 +868,23 @@ object CrawlEngine {
       // join (touched side preserved, so newTick is never null); untouched
       // hosts stay as they are (round-2 scale-killer B: at 10^8 hosts a
       // full-outer rewrite was a frontier-sized write per round)
-      val hostChanges = hosts.join(hostUpdates, Seq("host"), "right")
-        .withColumn("failCount2", (coalesce(col("failCount"), lit(0)) + col("nFails")).cast("int"))
-        .select(col("host"),
-          when(lit(cfg.maxHostFailures > 0) && col("failCount2") >= cfg.maxHostFailures,
-            lit(DeadTick))
-            .otherwise(col("newTick")).as("nextTick"),
-          col("failCount2").as("failCount"))
+      val hostChanges = SnapshotStore.Changes(
+        hosts.join(hostUpdates, Seq("host"), "right")
+          .withColumn("failCount2",
+            (coalesce(col("failCount"), lit(0)) + col("nFails")).cast("int"))
+          .select(col("host"),
+            when(lit(cfg.maxHostFailures > 0) && col("failCount2") >= cfg.maxHostFailures,
+              lit(DeadTick))
+              .otherwise(col("newTick")).as("nextTick"),
+            col("failCount2").as("failCount")),
+        Some(fetched.select("host"))) // the keys, from the fetched cache
 
       // R7 shard update: cogroup on shard id — network cost ∝ new links +
       // touched shard bytes, driver cost zero; persisted with the snapshot
-      // (the URL-seen set resumes exactly with the frontier). A rebuilt
-      // (not-on-disk) seen set covers every shard.
+      // (the URL-seen set resumes exactly with the frontier). A seen set
+      // built this round (not on disk) has no earlier version to merge
+      // onto: its change set is every shard, the touched ones replaced.
       val newKeys = discovered.select("urlNorm")
-      val allKeys = frontier.select("urlNorm").unionByName(newKeys)
       // bloom-shard saturation signal (round-3 VERDICT item 8): a filter
       // sized for seenExpectedPerShard keys degrades FPP silently past
       // capacity — membership stays exact (the anti-join confirms) but the
@@ -910,7 +921,7 @@ object CrawlEngine {
             s"shards at expectedPerShard=$newCap (compaction auto-resize)")
           seenCapacityOut = newCap
           seenSaturation = Some((maxIns, maxIns.toDouble / newCap))
-          Some(shardsOf(allKeys, newCap))
+          Some(shardsOf(frontier.select("urlNorm").unionByName(newKeys), newCap))
         } else {
           if (ratio >= 0.9)
             seenWarning = Some(f"[graft] seen-shard saturation: fullest shard at " +
@@ -920,10 +931,15 @@ object CrawlEngine {
         }
       }
       val seenChanges = seenShards.map { shardsDf =>
+        // the keys are at most seenShards rows per partition of the new
+        // links: broadcast, so a full write never shuffles the previous
+        // shards a second time
+        val touchedShards = SnapshotStore.Changes(
+          graft.seen.BloomShards.updateTouchedDf(shardsDf, newKeys, "urlNorm", cfg.seenShards),
+          Some(broadcast(graft.seen.BloomShards.shardIds(newKeys, "urlNorm", cfg.seenShards))))
         SnapshotStore.SeenChanges(
-          if (seenOnDisk)
-            graft.seen.BloomShards.updateTouchedDf(shardsDf, newKeys, "urlNorm", cfg.seenShards)
-          else shardsOf(allKeys, effCapacity),
+          if (seenOnDisk) touchedShards
+          else SnapshotStore.Changes(SnapshotStore.replaceByKey(shardsDf, touchedShards, "shard")),
           saturationCheck)
       }
       // A8-A13 sink family: raw + parsed sinks write BEFORE the manifest

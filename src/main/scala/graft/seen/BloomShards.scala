@@ -111,6 +111,17 @@ object BloomShards {
       if (ks.isEmpty) Iterator.empty else Iterator.single(insertKeys(sid, bs, ks))
     }
 
+  /** The shard ids of the non-null keys of `newKeys` (a `shard` column):
+    * the shards [[updateTouchedDf]] emits for them, from a plan without the
+    * cogroup. Deduplicated within each partition only — no shuffle — so
+    * the result has at most `nShards` rows per partition of `newKeys`. */
+  def shardIds(newKeys: DataFrame, keyCol: String, nShards: Int): DataFrame = {
+    val spark = newKeys.sparkSession
+    import spark.implicits._
+    withShard(newKeys, keyCol, nShards).select("shard").as[Int]
+      .mapPartitions(_.toSet.iterator).toDF("shard")
+  }
+
   /** Build a shard Dataset from scratch over a key column: every shard,
     * keyless ones empty (the cogroup is full-outer on shard id). */
   def buildDf(keys: DataFrame, keyCol: String, nShards: Int,

@@ -25,6 +25,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
     import spark.implicits._
     rows.toDF("id", "v")
   }
+  private def ch(df: DataFrame) = SnapshotStore.Changes(df)
 
   test("manifest round-trips keys/values with quotes, backslashes and newlines") {
     val store = new SnapshotStore(tmp("esc"), spark)
@@ -33,7 +34,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
       """resource.used.px-"q"""" -> "3",
       "resource" -> "a\\b\nc\t\"d\"",
       "plain" -> "value")
-    store.commit(0, df2(Seq(1L -> "a")), df2(Nil), None, nasty)
+    store.commit(0, ch(df2(Seq(1L -> "a"))), ch(df2(Nil)), None, nasty)
     val back = store.readMeta(0)
     nasty.foreach { case (k, v) =>
       assert(back.get(k).contains(v), s"key $k: got ${back.get(k)}, want $v")
@@ -44,9 +45,9 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
   test("allResults survives a truncated part file in a crash-orphaned results dir") {
     val dir = tmp("orphan")
     val store = new SnapshotStore(dir, spark)
-    store.commit(0, df2(Seq(1L -> "a")), df2(Nil), Some(df2(Seq(10L -> "r0"))),
+    store.commit(0, ch(df2(Seq(1L -> "a"))), ch(df2(Nil)), Some(df2(Seq(10L -> "r0"))),
       Map("nextRound" -> "0", "nextId" -> "1"))
-    store.commit(1, df2(Seq(1L -> "a")), df2(Nil), Some(df2(Seq(11L -> "r1"))),
+    store.commit(1, ch(df2(Seq(1L -> "a"))), ch(df2(Nil)), Some(df2(Seq(11L -> "r1"))),
       Map("nextRound" -> "1", "nextId" -> "1"))
     // crash artifact: an UNCOMMITTED results/v=2 with a truncated part file.
     // Reading the results ROOT let parquet schema inference sample it and
@@ -66,10 +67,10 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
     val badHosts = spark.range(1).select(boom(col("id")).as("host"))
     val finished = new AtomicBoolean(false)
     // a seen write whose post-write step outlasts the failing hosts write
-    val slowSeen = SnapshotStore.SeenChanges(spark.range(1).toDF("shard"),
+    val slowSeen = SnapshotStore.SeenChanges(ch(spark.range(1).toDF("shard")),
       _ => { Thread.sleep(3000); finished.set(true); None })
     val ex = intercept[Exception] {
-      store.commit(0, df2(Seq(1L -> "a")), badHosts, None,
+      store.commit(0, ch(df2(Seq(1L -> "a"))), ch(badHosts), None,
         Map("nextRound" -> "0", "nextId" -> "1"), seen = Some(slowSeen))
     }
     assert(finished.get(), s"commit rethrew ($ex) while a sibling write was still running")
@@ -93,17 +94,20 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
       .toDF("host", "nextTick", "failCount")
     val meta = Map("nextRound" -> "0", "nextId" -> "10", "frontierSource" -> "true",
       "seenShards" -> "4")
-    store.commit(0, frontier((0L until 10L).map(i => i -> s"u$i@v0")),
-      hosts((0 until 3).map(i => s"h$i" -> 0L)), None, meta,
+    store.commit(0, ch(frontier((0L until 10L).map(i => i -> s"u$i@v0"))),
+      ch(hosts((0 until 3).map(i => s"h$i" -> 0L))), None, meta,
       seen = Some(SnapshotStore.SeenChanges(
-        (0 until 4).map(i => (i, Array[Byte](0))).toDF("shard", "bytes"))))
+        ch((0 until 4).map(i => (i, Array[Byte](0))).toDF("shard", "bytes")))))
     (1 to depth).foreach { k =>
+      // the frontier's keys come from their own plan, as the engine's do
       store.commit(k,
-        frontier(Seq(k.toLong, k + 1L).map(id => id -> s"u$id@v$k"))
-          .withColumn("source", lit(s"src$k")),
-        hosts(Seq(s"h${k % 3}" -> k.toLong)), None, meta, compact = compactAt(k),
+        SnapshotStore.Changes(
+          frontier(Seq(k.toLong, k + 1L).map(id => id -> s"u$id@v$k"))
+            .withColumn("source", lit(s"src$k")),
+          Some(Seq(k.toLong, k + 1L).toDF("id"))),
+        ch(hosts(Seq(s"h${k % 3}" -> k.toLong))), None, meta, compact = compactAt(k),
         seen = Some(SnapshotStore.SeenChanges(
-          Seq((k % 4, Array[Byte](k.toByte), k.toLong)).toDF("shard", "bytes", "inserts"))))
+          ch(Seq((k % 4, Array[Byte](k.toByte), k.toLong)).toDF("shard", "bytes", "inserts")))))
     }
     store
   }
@@ -199,11 +203,11 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
     val meta = Map("nextRound" -> "0", "nextId" -> "1")
     def shards(ids: Seq[Int]) =
       ids.map(i => (i, Array[Byte](i.toByte), 1L)).toDF("shard", "bytes", "inserts")
-    store.commit(0, df2(Seq(1L -> "a")), df2(Nil), None, meta)
+    store.commit(0, ch(df2(Seq(1L -> "a"))), ch(df2(Nil)), None, meta)
     assert(store.readMeta(0)("frontierFormat") == "full" && !store.hasSeen(0))
     // v1 is no compaction point, but v0 has no seen shards: v1's are full
-    store.commit(1, df2(Seq(1L -> "b")), df2(Nil), None, meta,
-      seen = Some(SnapshotStore.SeenChanges(shards(Seq(0, 1)))))
+    store.commit(1, ch(df2(Seq(1L -> "b"))), ch(df2(Nil)), None, meta,
+      seen = Some(SnapshotStore.SeenChanges(ch(shards(Seq(0, 1))))))
     val m1 = store.readMeta(1)
     assert(m1("frontierFormat") == "delta" && m1("frontierBase") == "0", s"$m1")
     assert(m1("seenFormat") == "full" && m1("seenBase") == "1", s"$m1")
@@ -212,13 +216,42 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
 
   test("a change set that covers every shard replaces the seen table") {
     import spark.implicits._
-    val store = deltaStore(2)
-    val all = (0 until 4).map(i => (i, Array[Byte](42), 7L)).toDF("shard", "bytes", "inserts")
-    store.commit(3, store.readFrontier(2).limit(0), store.readHosts(2).limit(0), None,
-      Map("frontierSource" -> "true"), compact = true, seen = Some(SnapshotStore.SeenChanges(all)))
-    assert(store.readMeta(3)("seenFormat") == "full")
-    val back = store.readSeen(3).collect()
+    def all(b: Int) = (0 until 4).map(i => (i, Array[Byte](b.toByte), 7L))
+      .toDF("shard", "bytes", "inserts")
+    def back(store: SnapshotStore, v: Int) = store.readSeen(v).collect()
       .map(r => (r.getInt(0), r.getAs[Array[Byte]](1).toSeq, r.getLong(2))).sortBy(_._1).toSeq
-    assert(back == (0 until 4).map(i => (i, Seq(42.toByte), 7L)))
+    def want(b: Int) = (0 until 4).map(i => (i, Seq(b.toByte), 7L))
+    val store = deltaStore(2)
+    store.commit(3, ch(store.readFrontier(2).limit(0)), ch(store.readHosts(2).limit(0)), None,
+      Map("frontierSource" -> "true"), compact = true,
+      seen = Some(SnapshotStore.SeenChanges(ch(all(42)))))
+    assert(store.readMeta(3)("seenFormat") == "full")
+    assert(back(store, 3) == want(42))
+    // a table afterFull returns (an auto-resize rebuild) replaces the one written
+    store.commit(4, ch(store.readFrontier(3).limit(0)), ch(store.readHosts(3).limit(0)), None,
+      Map("frontierSource" -> "true"), compact = true,
+      seen = Some(SnapshotStore.SeenChanges(ch(all(43)), written => {
+        assert(written.count() == 4)
+        Some(all(44))
+      })))
+    assert(back(store, 4) == want(44))
+  }
+
+  test("a full write with the keys given evaluates the rows once; an Observation counts them once") {
+    import spark.implicits._
+    val store = deltaStore(2)
+    val evaluated = spark.sparkContext.longAccumulator("rows")
+    val counted = udf((id: Long) => { evaluated.add(1); id })
+    val obs = org.apache.spark.sql.Observation("full-write")
+    val rows = store.readFrontier(2).filter(col("id") < 3)
+      .withColumn("id", counted(col("id"))).withColumn("url", lit("rewritten"))
+      .observe(obs, count(lit(1)).as("n"))
+    store.commit(3, SnapshotStore.Changes(rows, Some(Seq(0L, 1L, 2L).toDF("id"))),
+      ch(store.readHosts(2).limit(0)), None, Map("frontierSource" -> "true"), compact = true)
+    assert(evaluated.value == 3L, s"the rows were evaluated ${evaluated.value / 3.0} times")
+    assert(obs.get("n") == 3L)
+    val f = store.readFrontier(3).collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("url")).toMap
+    assert(f.keySet == (0L until 10L).toSet)
+    assert(f.filter(_._2 == "rewritten").keySet == Set(0L, 1L, 2L))
   }
 }

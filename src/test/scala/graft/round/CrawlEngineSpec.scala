@@ -165,6 +165,14 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     assert(firstSeen.headOption.exists(_ > 1) &&
       lateStore.readMeta(firstSeen.head)("seenFormat") == "full",
       s"versions with seen shards: $firstSeen")
+    // the shards built from the previous frontier, then given the round's
+    // new links, equal shards built from that version's whole frontier
+    val rebuilt = graft.seen.BloomShards.buildDf(
+      lateStore.readFrontier(firstSeen.head).select("urlNorm"), "urlNorm", bloomCfg.seenShards,
+      bloomCfg.seenExpectedPerShard, bloomCfg.seenFpp)
+    def shardRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getInt(0), r.getAs[Array[Byte]](1).toSeq, r.getLong(2))).sortBy(_._1).toSeq
+    assert(shardRows(lateStore.readSeen(firstSeen.head)) == shardRows(rebuilt))
   }
 
   test("bucketed on-disk corpus staging yields the identical crawl (no corpus cache)") {
@@ -499,6 +507,17 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     val (a, _) = engineFetches(full)
     val (b, _) = engineFetches(timed)
     assert(a == b)
+  }
+
+  test("a frontierLayout other than full or delta is refused at construction") {
+    // CrawlJob reads the layout from GRAFT_LAYOUT unchecked: a typo must
+    // fail loudly, not pick a compaction cadence
+    Seq("FULL", "Delta", "", "merge").foreach { bad =>
+      val e = intercept[IllegalArgumentException](CrawlConfig(frontierLayout = bad))
+      assert(e.getMessage.contains("frontierLayout"), e.getMessage)
+    }
+    assert(CrawlConfig(frontierLayout = "delta").frontierLayout == "delta")
+    assert(CrawlConfig().frontierLayout == "full")
   }
 
   test("manifest round-trips resource ids with quotes/newlines; empty pool refused") {

@@ -51,7 +51,7 @@ class BloomShardsSpec extends AnyFunSuite with SparkSpec {
     // incremental update (touched shards replacing theirs) keeps old + new members
     val more = (0 until 500).map(i => s"new$i")
     val shards2 = SnapshotStore.replaceByKey(shardsDf,
-      BloomShards.updateTouchedDf(shardsDf, more.toDF("k"), "k", n), "shard")
+      SnapshotStore.Changes(BloomShards.updateTouchedDf(shardsDf, more.toDF("k"), "k", n)), "shard")
     assert(BloomShards.probeFlagsDf((keys ++ more).toDF("k"), "k", shards2, n)
       .filter(not(col("maybe"))).count() == 0)
   }
@@ -75,8 +75,13 @@ class BloomShardsSpec extends AnyFunSuite with SparkSpec {
     val newKeys = Seq("zz-new-key-1").toDF("k") // one key → exactly one touched shard
     val touched = BloomShards.updateTouchedDf(base, newKeys, "k", n)
     assert(touched.count() == 1, "delta write set must contain only the touched shard")
+    // shardIds names the touched shards without the cogroup
+    val many = (0 until 40).map(i => s"m$i").toDF("k")
+    assert(BloomShards.shardIds(many, "k", n).as[Int].collect().toSet ==
+      BloomShards.updateTouchedDf(base, many, "k", n).select("shard").as[Int].collect().toSet)
     // the store's full form: touched rows override, untouched come from base
-    val merged = SnapshotStore.replaceByKey(base, touched, "shard")
+    val merged = SnapshotStore.replaceByKey(base,
+      SnapshotStore.Changes(touched, Some(BloomShards.shardIds(newKeys, "k", n))), "shard")
     assert(merged.count() == n)
     val all = ((0 until 1000).map(i => s"u$i") :+ "zz-new-key-1").toDF("k")
     assert(BloomShards.probeFlagsDf(all, "k", merged, n)
@@ -131,8 +136,8 @@ class BloomShardsSpec extends AnyFunSuite with SparkSpec {
     assert(BloomShards.saturationDf(empty, cap)
       .agg(max(col("inserts"))).head().getLong(0) == 0L)
     val s1 = BloomShards.buildDf((0 until 100).map(i => s"u$i").toDF("k"), "k", n, expectedPerShard = cap)
-    val s2 = SnapshotStore.replaceByKey(s1,
-      BloomShards.updateTouchedDf(s1, (100 until 400).map(i => s"u$i").toDF("k"), "k", n), "shard")
+    val s2 = SnapshotStore.replaceByKey(s1, SnapshotStore.Changes(
+      BloomShards.updateTouchedDf(s1, (100 until 400).map(i => s"u$i").toDF("k"), "k", n)), "shard")
     val sat = BloomShards.saturationDf(s2, cap)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(3)))
     // counters accumulate across updates: 400 keys total across 4 shards
