@@ -28,10 +28,9 @@ object Bench {
   def crawlRoundsDetailed(spark: SparkSession, stateDir: String, nPages: Long,
                           nHosts: Int, rounds: Int, roundBudget: Int,
                           textRepeat: Int = 1,
-                          staging: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_STAGING", "memory"),
                           // "full" or "delta" — the latter with
-                          // SPARK_GRAFT_BENCH_SEEN=1 + bucketed staging is
-                          // the 100 TB configuration (VERDICT r2 item 9)
+                          // SPARK_GRAFT_BENCH_SEEN=1 is the 100 TB
+                          // configuration (VERDICT r2 item 9)
                           layout: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_LAYOUT", "full"),
                           seenFilter: Boolean = sys.env.get("SPARK_GRAFT_BENCH_SEEN").contains("1"),
                           // called after bootstrap (corpus staging, v0
@@ -43,9 +42,7 @@ object Bench {
       : Vector[(Long, Double)] = {
     import spark.implicits._
     val corpus = CorpusTable.createLarge(spark, nPages, nHosts, textRepeat = textRepeat)
-    val corpusN =
-      if (staging == "bucketed") CrawlEngine.corpusStagedBucketed(spark, corpus, stateDir)
-      else CrawlEngine.corpusStaged(spark, corpus)
+    val corpusN = CrawlEngine.corpusStagedBucketed(spark, corpus, stateDir)
     val store = new SnapshotStore(stateDir, spark)
     // distributed bootstrap: the whole corpus is the seed frontier.
     // Bench ids come from monotonically_increasing_id — per-partition
@@ -91,7 +88,6 @@ object Bench {
       }
       r += 1
     }
-    if (staging != "bucketed") corpusN.unpersist()
     out.result()
   }
 

@@ -122,8 +122,8 @@ object ScalingBench {
       nHosts = 4096, rounds = rounds, roundBudget = budget, textRepeat = textRepeat,
       onBootstrapDone = () => {
         // re-zero so per-round shuffle/write/CPU metrics cover ONLY the
-        // measured rounds, not one-time bootstrap (corpus staging for the
-        // bucketed path, v0 commit, seen-shard build)
+        // measured rounds, not one-time bootstrap (corpus staging, v0
+        // commit, seen-shard build)
         resetCounters()
       })
     // symmetric drain before the final read: the last round's stage events
@@ -134,7 +134,7 @@ object ScalingBench {
     // Identical probe shape at every level/draw ⇒ directly comparable
     // hardware-state reading per measurement (see MemBandwidth.probe doc).
     val ambientGbps = graft.tools.MemBandwidth.probe(4, 16 * 1024 * 1024, 4)
-    // round 0 pays corpus-cache first-touch + codegen/JIT warmup — report
+    // round 0 pays first-touch + codegen/JIT warmup — report
     // steady-state rounds (what a long-running crawl amortizes to)
     val steady = if (per.length > 1) per.tail else per
     val fetches = steady.map(_._1).sum
@@ -146,7 +146,7 @@ object ScalingBench {
     val shufGb = (shuffleWrite.get + shuffleRead.get) / 1e9
     val outGb = outputBytes.get / 1e9
     val roundsRun = per.length
-    println(f"""{"metric":"scaling_level","cores":$cores,"fetches":$fetches,"sec":$sec%.2f,"urls_per_sec":${fetches / sec}%.1f,"fetches_all":$fetchesAll,"sec_all":$secAll%.2f,"pages":$nPages,"budget":$budget,"text_repeat":$textRepeat,"layout":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_LAYOUT", "full")}","staging":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_STAGING", "memory")}","seen":${sys.env.get("SPARK_GRAFT_BENCH_SEEN").contains("1")},"rounds_measured":${steady.length},"warmup_round_sec":${per.head._2}%.2f,"shuffle_gb_total":$shufGb%.2f,"shuffle_gb_per_round":${shufGb / math.max(roundsRun, 1)}%.2f,"write_gb_total":$outGb%.2f,"write_gb_per_round":${outGb / math.max(roundsRun, 1)}%.2f,"executor_cpu_sec":${cpuTimeNs.get / 1e9}%.1f,"ambient_gbps":$ambientGbps%.1f}""")
+    println(f"""{"metric":"scaling_level","cores":$cores,"fetches":$fetches,"sec":$sec%.2f,"urls_per_sec":${fetches / sec}%.1f,"fetches_all":$fetchesAll,"sec_all":$secAll%.2f,"pages":$nPages,"budget":$budget,"text_repeat":$textRepeat,"layout":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_LAYOUT", "full")}","seen":${sys.env.get("SPARK_GRAFT_BENCH_SEEN").contains("1")},"rounds_measured":${steady.length},"warmup_round_sec":${per.head._2}%.2f,"shuffle_gb_total":$shufGb%.2f,"shuffle_gb_per_round":${shufGb / math.max(roundsRun, 1)}%.2f,"write_gb_total":$outGb%.2f,"write_gb_per_round":${outGb / math.max(roundsRun, 1)}%.2f,"executor_cpu_sec":${cpuTimeNs.get / 1e9}%.1f,"ambient_gbps":$ambientGbps%.1f}""")
     spark.stop()
   }
 }

@@ -130,13 +130,11 @@ case class CrawlConfig(
     // pool semantics (one bad proxy is parked, the rest keep crawling).
     // 0 disables. Orthogonal to maxHostFailures (D3, per-host).
     maxResourceFailures: Int = 0,
-    // corpus staging: "memory" persists the normalized corpus (right for a
-    // single box where it fits); "bucketed" writes it once as an on-disk
-    // parquet table bucketed on urlNorm — the 100 TB form: no cache, html
-    // read from disk only inside the fetch join, corpus side of every join
-    // still exchange-free. Crawl output is bit-identical either way
-    // (CrawlEngineSpec pins it).
-    corpusStaging: String = "memory",
+    // corpus staging: "bucketed" is the only value (any other is refused):
+    // the corpus is staged once under the state dir as a parquet table
+    // bucketed on urlNorm (CrawlEngine.corpusStagedBucketed). The field
+    // stays only because the perfbench workloads set it.
+    corpusStaging: String = "bucketed",
     // Registered projects (multi-crawl multiplexing). Each round leases ONE
     // task type, picked by a seeded draw among the distinct registered
     // types — the deterministic twin of the master's random pick
@@ -188,4 +186,6 @@ case class CrawlConfig(
   // pick a compaction cadence
   require(frontierLayout == "full" || frontierLayout == "delta",
     s"CrawlConfig.frontierLayout must be \"full\" or \"delta\": $frontierLayout")
+  require(corpusStaging == "bucketed",
+    s"CrawlConfig.corpusStaging must be \"bucketed\": $corpusStaging")
 }

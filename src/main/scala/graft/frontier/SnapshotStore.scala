@@ -5,9 +5,9 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import scala.util.Failure
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, row_number}
+import org.apache.spark.sql.functions.{col, lit, max, row_number}
 import org.apache.spark.sql.types._
 
 /** Iceberg-style snapshot layer over Parquet (SURVEY.md §7.0: no Iceberg
@@ -105,11 +105,14 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
     val bases = (Seq(Frontier, Hosts) ++ seen.map(_ => Seen)).map { t =>
       t -> prev.get(s"${t.name}Base").filter(_ => !compact).fold(v)(_.toInt)
     }.toMap
-    def write(t: Table, changes: Changes): Unit = {
+    // `full` wraps the rows of a full write
+    def write(t: Table, changes: Changes, full: DataFrame => DataFrame = identity): Unit = {
       val rows =
-        if (bases(t) == v && prev.contains(s"${t.name}Base"))
-          SnapshotStore.replaceByKey(readTable(t, v - 1, prev), changes, t.key)
-        else changes.rows
+        if (bases(t) != v) changes.rows
+        else full(
+          if (prev.contains(s"${t.name}Base"))
+            SnapshotStore.replaceByKey(readTable(t, v - 1, prev), changes, t.key)
+          else changes.rows)
       rows.write.mode("overwrite").parquet(dir(v, t.name))
     }
     // write-audit-publish: data first (overwrite any orphan), manifest last.
@@ -141,10 +144,17 @@ final class SnapshotStore(val baseDir: String, spark: SparkSession) {
           Future(write(Hosts, hosts)) ::
           results.map(r => Future(r.write.mode("overwrite").parquet(resultsDir(v)))).toList :::
           seen.map(s => Future {
-            write(Seen, s.changes)
+            // a full write covers every shard: the largest `inserts` it
+            // writes is the fullest shard's, observed as the rows are written
+            // (rows without the optional column observe null)
+            val fullest = Observation()
+            write(Seen, s.changes, rows => rows.observe(fullest, max(
+              if (rows.columns.contains("inserts")) col("inserts")
+              else lit(null).cast(LongType)).as("max")))
             // a table afterFull returns covers every shard: written as is
             if (bases(Seen) == v)
-              s.afterFull(spark.read.schema(SnapshotStore.SeenSchema).parquet(dir(v, Seen.name)))
+              s.afterFull(fullest.get.get("max").collect { case n: java.lang.Long => n.longValue }
+                .getOrElse(0L))
                 .foreach(_.write.mode("overwrite").parquet(dir(v, Seen.name)))
           }).toList
       val failures = writes.flatMap(w => Await.ready(w, Duration.Inf).value.collect {
@@ -275,13 +285,14 @@ object SnapshotStore {
       .unionByName(changes.rows, allowMissingColumns = true)
 
   /** The seen shards' changes for a commit, written concurrently with the
-    * other tables. After a full write, `afterFull` gets the table as
-    * written; a table it returns (one that covers every shard, e.g. a
-    * rebuild at a larger capacity) is written in its place. It runs on a
-    * commit thread that is awaited before `metaLazy` is evaluated, so the
-    * manifest may carry what it computed. */
+    * other tables. After a full write, `afterFull` gets the fullest shard's
+    * `inserts` as written (0 if none), observed by the write itself, so no
+    * job reads the table back; a table it returns (one that covers every
+    * shard, e.g. a rebuild at a larger capacity) is written in its place.
+    * It runs on a commit thread that is awaited before `metaLazy` is
+    * evaluated, so the manifest may carry what it computed. */
   final case class SeenChanges(changes: Changes,
-                               afterFull: DataFrame => Option[DataFrame] = _ => None)
+                               afterFull: Long => Option[DataFrame] = _ => None)
 
   /** One `"key":"value"` pair with escape-aware string bodies. */
   private[frontier] val pairRe = """"((?:[^"\\]|\\.)*)":"((?:[^"\\]|\\.)*)"""".r

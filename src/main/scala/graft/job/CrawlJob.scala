@@ -33,10 +33,9 @@ object CrawlJob {
       else CorpusTable.create(spark, spec)
     val store = new SnapshotStore(stateDir, spark)
     // production-shape knobs via env (the 100 TB configuration is
-    // GRAFT_LAYOUT=delta GRAFT_STAGING=bucketed GRAFT_SEEN=1):
+    // GRAFT_LAYOUT=delta GRAFT_SEEN=1):
     val cfg = CrawlConfig(
       frontierLayout = sys.env.getOrElse("GRAFT_LAYOUT", "full"),
-      corpusStaging = sys.env.getOrElse("GRAFT_STAGING", "memory"),
       seenFilter = sys.env.get("GRAFT_SEEN").contains("1"),
       resources = sys.env.get("GRAFT_RESOURCES")
         .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq("default")),

@@ -227,14 +227,23 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
       seen = Some(SnapshotStore.SeenChanges(ch(all(42)))))
     assert(store.readMeta(3)("seenFormat") == "full")
     assert(back(store, 3) == want(42))
-    // a table afterFull returns (an auto-resize rebuild) replaces the one written
+    // afterFull gets the fullest shard's inserts as written; a table it
+    // returns (an auto-resize rebuild) replaces the one written
+    var fullest = -1L
     store.commit(4, ch(store.readFrontier(3).limit(0)), ch(store.readHosts(3).limit(0)), None,
       Map("frontierSource" -> "true"), compact = true,
-      seen = Some(SnapshotStore.SeenChanges(ch(all(43)), written => {
-        assert(written.count() == 4)
+      seen = Some(SnapshotStore.SeenChanges(ch(all(43)), maxInserts => {
+        fullest = maxInserts
         Some(all(44))
       })))
+    assert(fullest == 7L)
     assert(back(store, 4) == want(44))
+    // the full write covers the shards it keeps from the previous version too
+    store.commit(5, ch(store.readFrontier(4).limit(0)), ch(store.readHosts(4).limit(0)), None,
+      Map("frontierSource" -> "true"), compact = true,
+      seen = Some(SnapshotStore.SeenChanges(ch(Seq((0, Array[Byte](1), 3L))
+        .toDF("shard", "bytes", "inserts")), maxInserts => { fullest = maxInserts; None })))
+    assert(fullest == 7L)
   }
 
   test("a full write with the keys given evaluates the rows once; an Observation counts them once") {

@@ -89,6 +89,8 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     val (stateDir, summary) = seededCrawl(None)
     assert(summary.fetches > 0)
     assertOrderMatchesSimulator(stateDir)
+    assert(Files.exists(java.nio.file.Paths.get(s"$stateDir/corpus_bucketed")),
+      "staged table should live on disk under the state dir")
   }
 
   test("extracted text is byte-identical to the corpus text column") {
@@ -116,7 +118,7 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     // boundary), the seen filter and the write-back sink
     val stateDir = tmpDir("compiled-prod")
     val corpus = CorpusTable.create(spark, spec)
-    val prodCfg = cfg.copy(corpusStaging = "bucketed", frontierLayout = "delta",
+    val prodCfg = cfg.copy(frontierLayout = "delta",
       frontierCompactEvery = 3, seenFilter = true, seenShards = 4)
     val hooks = PipelineHooks(parsedSinks = Seq(FrontierWriteBackSink))
     CrawlEngine.forcedInterpreted.withValue(Some(false)) {
@@ -173,19 +175,6 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     def shardRows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getAs[Array[Byte]](1).toSeq, r.getLong(2))).sortBy(_._1).toSeq
     assert(shardRows(lateStore.readSeen(firstSeen.head)) == shardRows(rebuilt))
-  }
-
-  test("bucketed on-disk corpus staging yields the identical crawl (no corpus cache)") {
-    val mem = tmpDir("stage-mem"); val buck = tmpDir("stage-buck")
-    val corpus = CorpusTable.create(spark, spec)
-    CrawlEngine.crawl(spark, new SnapshotStore(mem, spark), corpus, CorpusGen.seeds(spec), cfg)
-    CrawlEngine.crawl(spark, new SnapshotStore(buck, spark), corpus, CorpusGen.seeds(spec),
-      cfg.copy(corpusStaging = "bucketed"))
-    val (a, _) = engineFetches(mem)
-    val (b, _) = engineFetches(buck)
-    assert(a == b)
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$buck/corpus_bucketed")),
-      "staged table should live on disk under the state dir")
   }
 
   test("A5 least-used resource pick matches the simulator and survives resume") {
@@ -518,6 +507,10 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     }
     assert(CrawlConfig(frontierLayout = "delta").frontierLayout == "delta")
     assert(CrawlConfig().frontierLayout == "full")
+    // the corpus has one staging, bucketed on disk: any other value is refused
+    val e = intercept[IllegalArgumentException](CrawlConfig(corpusStaging = "memory"))
+    assert(e.getMessage.contains("corpusStaging"), e.getMessage)
+    assert(CrawlConfig().corpusStaging == "bucketed")
   }
 
   test("manifest round-trips resource ids with quotes/newlines; empty pool refused") {
@@ -654,7 +647,7 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     CorpusTable.create(spark, smallSpec).write.mode("overwrite").parquet(pq)
     val dir = tmpDir("resume-jobs")
     // bans reopen a host only after banBackoffTicks: allow the rounds to finish
-    val bCfg = cfg.copy(corpusStaging = "bucketed", maxRounds = 1000)
+    val bCfg = cfg.copy(maxRounds = 1000)
     val stops = scala.collection.mutable.Buffer.empty[String]
     val hooks = PipelineHooks(notifiers = Seq(
       new CrawlNotifier {
@@ -730,8 +723,7 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     import org.apache.spark.metrics.source.CodegenMetrics
     val dir = tmpDir("exec-mode")
     val corpus = CorpusTable.create(spark, spec)
-    val prodCfg = cfg.copy(corpusStaging = "bucketed", frontierLayout = "delta",
-      seenFilter = true, seenShards = 4)
+    val prodCfg = cfg.copy(frontierLayout = "delta", seenFilter = true, seenShards = 4)
     // state to run rounds on. Its interpreted rounds also cache the few
     // literal-free classes Spark generates in every mode (cache-scan
     // iterators, row joiners, range-partition orderings); later rounds
@@ -863,8 +855,7 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
   test("robots rules stage with the bucketed corpus and read back corpus-free") {
     val dir = tmpDir("robots-staged")
     val corpus = CorpusTable.create(spark, spec)
-    CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec),
-      cfg.copy(corpusStaging = "bucketed"))
+    CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec), cfg)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/robots_rules")),
       "stage must persist the rules table beside corpus_bucketed")
     val staged = CrawlEngine.stagedRobotsRules(spark, dir)
@@ -888,6 +879,73 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
       .toDF("url", "warc_ts", "html", "text", "lang")
     CrawlEngine.corpusStagedBucketed(spark, noRobots, plainDir)
     assert(CrawlEngine.stagedRobotsRules(spark, plainDir) == Some(None))
+  }
+
+  test("a staging marker without its robots rules re-stages; the crawl joins the staged rules") {
+    val corpus = CorpusTable.create(spark, spec)
+    val shortCfg = cfg.copy(maxRounds = 6)
+    val sim = ReferenceSimulator.run(CorpusGen.simCorpus(spec), CorpusGen.seeds(spec), shortCfg)
+    // a marker written before robots staging (no robotsHosts key), and one
+    // that counts robots hosts whose rules table is gone
+    Seq("no-key", "no-table").foreach { stale =>
+      val dir = tmpDir(s"stale-marker-$stale")
+      CrawlEngine.corpusStagedBucketed(spark, corpus, dir)
+      val marker = java.nio.file.Paths.get(s"$dir/corpus_bucketed_marker.json")
+      val rulesDir = java.nio.file.Paths.get(s"$dir/robots_rules")
+      val staged = SnapshotStore.parseFlat(Files.readString(marker))
+      assert(staged("robotsHosts").toLong > 0, s"the corpus serves robots.txt: $staged")
+      if (stale == "no-key") Files.writeString(marker, SnapshotStore.writeFlat(staged - "robotsHosts"))
+      else Files.walk(rulesDir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec), shortCfg)
+      assert(SnapshotStore.parseFlat(Files.readString(marker)).get("robotsHosts") ==
+        staged.get("robotsHosts") && Files.exists(rulesDir), s"$stale: the corpus was not re-staged")
+      // the rounds joined the rules (robots verdicts and crawl-delays): the
+      // fetches equal the simulator's
+      assert(engineFetches(dir)._1 == sim.fetches.map(f => (f.round, f.seq, f.urlNorm, f.outcome)),
+        s"$stale: the crawl did not follow the staged robots rules")
+    }
+  }
+
+  test("a full-layout seen commit runs no job after its writes") {
+    val dir = tmpDir("seen-full-jobs")
+    val corpus = CorpusTable.create(spark, spec)
+    // the full layout writes the seen shards in full every round
+    val seenCfg = cfg.copy(seenFilter = true, seenShards = 4)
+    CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec),
+      seenCfg.copy(maxRounds = 1))
+    // each job with the call site of the SQL execution it runs in (a
+    // query's stage jobs are submitted from Spark's own threads, so only
+    // the execution carries the caller's call site)
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          executions.put(x.executionId.toString, x.description)
+        case _ =>
+      }
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // the resume runs round 1, which commits v2
+      CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec),
+        seenCfg.copy(maxRounds = 2))
+      org.apache.spark.GraftSparkAccess.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val store = new SnapshotStore(dir, spark)
+    assert(store.latestVersion.contains(2) && store.readMeta(2)("seenFormat") == "full")
+    assert(store.readMeta(2).contains("seenMaxShardInserts"))
+    // from the commit's first write on, every job belongs to a state-table
+    // write: the saturation check reads nothing back
+    val callSites = jobs.asScala.toSeq
+      .map(_.flatMap(id => Option(executions.get(id))).getOrElse("(no SQL execution)"))
+    def isWrite(callSite: String) = callSite.contains("parquet at SnapshotStore")
+    val firstWrite = callSites.indexWhere(isWrite)
+    assert(firstWrite >= 0, callSites.mkString("\n"))
+    val others = callSites.drop(firstWrite).filterNot(isWrite)
+    assert(others.isEmpty, s"jobs after the commit's first write: $others")
   }
 
   test("resume without the write-back sink preserves written-back source text") {
@@ -916,8 +974,8 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
 
   test("state tables on disk match the engine-owned read schemas (with and without write-back)") {
     val corpus = CorpusTable.create(spark, spec)
-    val prodCfg = cfg.copy(maxRounds = 1, corpusStaging = "bucketed",
-      frontierLayout = "delta", seenFilter = true, seenShards = 4)
+    val prodCfg = cfg.copy(maxRounds = 1, frontierLayout = "delta", seenFilter = true,
+      seenShards = 4)
     Seq(false, true).foreach { writeBack =>
       val dir = tmpDir(s"schema-pin-$writeBack")
       val hooks =
@@ -949,7 +1007,7 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     val corpus = CorpusTable.create(spark, spec)
     // compaction never fires: the round committing v=k+1 reads a merged
     // view of delta depth k
-    val deepCfg = cfg.copy(maxRounds = 8, corpusStaging = "bucketed", frontierLayout = "delta",
+    val deepCfg = cfg.copy(maxRounds = 8, frontierLayout = "delta",
       frontierCompactEvery = 1000, seenFilter = true, seenShards = 4)
     case class Job(timeMs: Long, callSite: String, inQuery: Boolean)
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
