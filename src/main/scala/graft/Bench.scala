@@ -143,12 +143,14 @@ object Bench {
     // crawl benchmark LAST: its snapshot churn + broadcasts degrade
     // later measurements in the same JVM (observed 40x on tiny queries)
     spark.catalog.clearCache()
+    // deleted however the crawl ends: it holds the staged corpus
     val stateDir = java.nio.file.Files.createTempDirectory("graft-bench-crawl").toString
     // 4096 hosts × budget 64 ≈ 262k candidates/round ⇒ the 200k round
     // budget binds (R2), matching how a production crawl amortizes fixed
     // per-round cost over large leases
     val (fetches, crawlSec) =
-      crawlRounds(spark, stateDir, nPages, nHosts = 4096, rounds = 3, roundBudget = 200000)
+      try crawlRounds(spark, stateDir, nPages, nHosts = 4096, rounds = 3, roundBudget = 200000)
+      finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stateDir))
     results("crawl_rounds") = crawlSec
     val urlsPerSec = fetches / math.max(crawlSec, 1e-9)
 

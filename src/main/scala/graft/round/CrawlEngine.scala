@@ -440,10 +440,12 @@ object CrawlEngine {
   /** `spark.sql.codegen.cache.maxEntries` for the shipped session builders
     * (CrawlJob, Bench, ScalingBench). The cache is a static conf that
     * Spark reads once per JVM, so it is sized where the session is built,
-    * not per round. A compiled round's working set is ~150 distinct
-    * classes, more than the default 100-entry LRU holds, so with the
+    * not per round. A compiled round needs ~190 entries (~150 distinct
+    * classes, some keyed twice: once per driver and executor class
+    * loader), more than the default 100-entry LRU holds, so with the
     * default every compiled round recompiles classes an earlier round
-    * evicted. */
+    * evicted. [[interpretRound]] reads the session's value: a smaller
+    * cache moves the compiled-round bar up. */
   val CodegenCacheMaxEntries = 512
 
   /** Weighted rows (frontier rows plus corpus rows /
@@ -465,11 +467,36 @@ object CrawlEngine {
     * }}}
     * Here the corpus holds 0.65 rows per frontier row. The curves cross
     * between 15.7k and 23.3k frontier rows (≈17.6k linearly; 17.0k and
-    * 25.2k weighted rows); the constant sits below both. With Spark's
-    * default 100-entry cache a compiled round recompiles ~190 classes and
-    * interpreting is cheaper at every measured size, so the constant is
-    * conservative there. */
+    * 25.2k weighted rows); the constant sits below both. A session whose
+    * cache is smaller uses [[SmallCacheInterpretBelowRows]] instead. */
   private[round] val InterpretBelowRows = 16000L
+
+  /** [[InterpretBelowRows]] for a session whose codegen cache holds fewer
+    * than [[CodegenCacheMaxEntries]] entries (Spark's default is 100).
+    * There a compiled round recompiles all of its ~190 cache entries every
+    * round, because they do not fit, so compiling pays off only at much
+    * larger rounds.
+    *
+    * Measured as for [[InterpretBelowRows]] (1 GB heap; frontier rows are
+    * the mean `nextId` of rounds 1–3), but with Spark's default 100-entry
+    * cache; the mean of two JVM pairs (one at 115.5k):
+    * {{{
+    * frontier rows      46.3k  92.4k  115.5k  138.5k  184.6k  368.9k
+    * weighted rows      50.1k  99.9k  124.9k  149.7k  199.6k  398.9k
+    * interpreted        3.90   5.89   7.50    8.51    10.73   19.15   executor CPU s
+    * compiled           4.74   6.48   7.80    9.15    10.35   18.15
+    * interpreted        5.33   5.63   6.66    6.54    7.14    10.03   round wall s
+    * compiled           6.66   7.32   7.61    8.41    8.71    11.86
+    * }}}
+    * A compiled round compiled 186–194 classes, an interpreted one none.
+    * Interpreting cost less executor CPU in every pair up to 124.9k
+    * weighted rows and more in every pair from 199.6k on; at 149.7k the
+    * pairs disagree (+0.21 and −1.49 s). The bar sits between the
+    * 124.9k point and the linear crossover (≈181k weighted rows). Round
+    * wall favours interpreting at every size (it is driver time the
+    * executor CPU leaves out), up to the largest that fits in the heap
+    * (368.9k frontier rows). */
+  private[round] val SmallCacheInterpretBelowRows = 128000L
 
   /** Corpus rows that weigh as much as one frontier row in
     * [[interpretRound]]. Every round streams the whole staged corpus
@@ -492,24 +519,40 @@ object CrawlEngine {
     * upper end of that interval (≈1.6 µs, 1/9.4 of a frontier row) and
     * rounds it to 1/8, so a corpus larger than measured runs compiled, as
     * every round did before this rule, rather than interpreted on an
-    * extrapolation. Verified up to 240k corpus rows. */
+    * extrapolation. Verified up to 240k corpus rows. Under
+    * [[SmallCacheInterpretBelowRows]] a small frontier over up to ~1M
+    * corpus rows runs interpreted, beyond that check (not measured): at
+    * the weight's upper end such a corpus would cost ~1.6 s more
+    * interpreted, under the 2.4–2.9 s of codegen a compiled round spends
+    * on its ~190 recompiles. */
   private[round] val CorpusRowsPerFrontierRow = 8L
 
-  /** A round's execution mode as a pure function of the rows it scans:
-    * interpreted while `frontierRows + corpusRows / CorpusRowsPerFrontierRow`
-    * is below [[InterpretBelowRows]], whole-stage codegen at and above it.
-    * Small rounds would spend more CPU compiling than interpreting their
-    * rows: with Spark's default 100-entry codegen cache a committed round
-    * recompiles ~200 classes every round, and even a cache that holds them
-    * all recompiles the ones that inline round-varying literals. Large
+  /** A round's execution mode as a pure function of the rows it scans and
+    * of the session's `spark.sql.codegen.cache.maxEntries`: interpreted
+    * while `frontierRows + corpusRows / CorpusRowsPerFrontierRow` is below
+    * the cache's bar, whole-stage codegen at and above it. The bar is
+    * [[InterpretBelowRows]] for a cache of at least
+    * [[CodegenCacheMaxEntries]] entries, which holds a compiled round's
+    * classes, and [[SmallCacheInterpretBelowRows]] for a smaller one, where
+    * a committed round recompiles ~190 classes every round. Small rounds
+    * would spend more CPU compiling than interpreting their rows; large
     * rounds repay the compiles (Kohn, Leis & Neumann, "Adaptive Execution
     * of Compiled Queries", ICDE 2018). */
-  private[graft] def interpretRound(frontierRows: Long, corpusRows: Long): Boolean =
-    frontierRows + corpusRows / CorpusRowsPerFrontierRow < InterpretBelowRows
+  private[graft] def interpretRound(frontierRows: Long, corpusRows: Long,
+                                    codegenCacheEntries: Int): Boolean = {
+    val bar =
+      if (codegenCacheEntries >= CodegenCacheMaxEntries) InterpretBelowRows
+      else SmallCacheInterpretBelowRows
+    frontierRows + corpusRows / CorpusRowsPerFrontierRow < bar
+  }
 
   /** Test seam: `Some(interpreted)` overrides [[interpretRound]] for the
     * rounds this thread runs inside `withValue`. */
   private[graft] val forcedInterpreted = new scala.util.DynamicVariable[Option[Boolean]](None)
+
+  /** A round manifest's `execMode` value: the mode its plans ran in. */
+  private[graft] def execMode(interpreted: Boolean): String =
+    if (interpreted) "interpreted" else "compiled"
 
   /** The Spark settings a round runs with. Interpreted: no whole-stage
     * codegen and interpreted projections, predicates and orderings. Compiled:
@@ -545,9 +588,11 @@ object CrawlEngine {
     * failures (the pool breaker's) are charged to it in the manifest.
     *
     * The round decides once whether its plans run compiled or interpreted
-    * ([[interpretRound]]) from the frontier and corpus sizes. Ids are
-    * dense, so the previous manifest's `nextId` is the frontier's exact row
-    * count and the decision costs no Spark job. */
+    * ([[interpretRound]]) from the frontier and corpus sizes and the
+    * session's codegen cache size, and records the mode in its manifest as
+    * `execMode`. Ids are dense, so the previous manifest's `nextId` is the
+    * frontier's exact row count; the cache size is a conf read. The
+    * decision costs no Spark job. */
   def runRound(
       spark: SparkSession,
       store: SnapshotStore,
@@ -564,7 +609,8 @@ object CrawlEngine {
     val nextId = meta0("nextId").toLong
     val resource = resourcePick(meta0, cfg).getOrElse(throw new IllegalArgumentException(
       s"every resource of ${cfg.resources.mkString(", ")} reached maxResourceFailures"))
-    val interpreted = forcedInterpreted.value.getOrElse(interpretRound(nextId, corpusRows))
+    val cacheEntries = spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt
+    val interpreted = forcedInterpreted.value.getOrElse(interpretRound(nextId, corpusRows, cacheEntries))
     val restoreSettings = applyRoundSettings(spark, interpreted)
     // every cache the round builds, released however the round ends
     val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -973,7 +1019,8 @@ object CrawlEngine {
           "selected" -> selectedCount.toString,
           "newLinks" -> newLinks.toString,
           "schemaVersion" -> SchemaVersion,
-          "frontierSource" -> carrySource.toString) ++
+          "frontierSource" -> carrySource.toString,
+          "execMode" -> execMode(interpreted)) ++
           (if (seenShards.isEmpty) Map.empty[String, String]
            else Map(
              "seenShards" -> cfg.seenShards.toString,

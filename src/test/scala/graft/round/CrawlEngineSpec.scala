@@ -28,6 +28,10 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
       CrawlEngine.roundSettings(interpreted = false).keySet)
       .map(k => k -> spark.conf.getOption(k)).toMap
 
+  /** The session's codegen cache size, as a round reads it. */
+  private def sessionCacheEntries: Int =
+    spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt
+
   private lazy val simOut =
     ReferenceSimulator.run(CorpusGen.simCorpus(spec), CorpusGen.seeds(spec), cfg)
 
@@ -85,7 +89,8 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
 
   test("engine crawl order matches the reference simulator exactly") {
     // the engine's own rule runs this small crawl interpreted
-    assert(CrawlEngine.interpretRound(simOut.frontier.size.toLong, CorpusGen.simCorpus(spec).size.toLong))
+    assert(CrawlEngine.interpretRound(simOut.frontier.size.toLong, CorpusGen.simCorpus(spec).size.toLong,
+      sessionCacheEntries))
     val (stateDir, summary) = seededCrawl(None)
     assert(summary.fetches > 0)
     assertOrderMatchesSimulator(stateDir)
@@ -699,24 +704,76 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("execution mode: interpreted below the scanned-rows threshold, compiled at and above") {
-    val t = CrawlEngine.InterpretBelowRows
     val w = CrawlEngine.CorpusRowsPerFrontierRow
-    assert(CrawlEngine.interpretRound(0L, 0L))
-    assert(CrawlEngine.interpretRound(t - 1, 0L))
-    assert(!CrawlEngine.interpretRound(t, 0L))
-    assert(!CrawlEngine.interpretRound(Long.MaxValue, 0L))
-    // w corpus rows weigh as much as one frontier row
-    assert(CrawlEngine.interpretRound(0L, w * t - 1))
-    assert(!CrawlEngine.interpretRound(0L, w * t))
-    assert(CrawlEngine.interpretRound(t / 2, w * (t / 2 - 1)))
-    assert(!CrawlEngine.interpretRound(t / 2, w * (t / 2)))
-    // a small frontier over a large corpus runs compiled
-    assert(!CrawlEngine.interpretRound(1000L, 10000000L))
+    val full = CrawlEngine.CodegenCacheMaxEntries
+    // each cache regime with its bar: a cache that holds a compiled round's
+    // classes, and a smaller one (Spark's default is 100 entries)
+    Seq(CrawlEngine.InterpretBelowRows -> Seq(full, full + 1, Int.MaxValue),
+      CrawlEngine.SmallCacheInterpretBelowRows -> Seq(full - 1, 100, 1)).foreach { case (t, caches) =>
+      caches.foreach { cache =>
+        def interpreted(frontierRows: Long, corpusRows: Long): Boolean =
+          CrawlEngine.interpretRound(frontierRows, corpusRows, cache)
+        assert(interpreted(0L, 0L))
+        assert(interpreted(t - 1, 0L), s"cache $cache")
+        assert(!interpreted(t, 0L), s"cache $cache")
+        assert(!interpreted(Long.MaxValue, 0L))
+        // w corpus rows weigh as much as one frontier row
+        assert(interpreted(0L, w * t - 1), s"cache $cache")
+        assert(!interpreted(0L, w * t), s"cache $cache")
+        assert(interpreted(t / 2, w * (t - t / 2 - 1)), s"cache $cache")
+        assert(!interpreted(t / 2, w * (t - t / 2)), s"cache $cache")
+      }
+    }
+    // compiling pays off later when the classes do not stay cached
+    assert(CrawlEngine.SmallCacheInterpretBelowRows > CrawlEngine.InterpretBelowRows)
+    // a small frontier over a large corpus runs compiled in both regimes
+    assert(!CrawlEngine.interpretRound(1000L, 10000000L, full))
+    assert(!CrawlEngine.interpretRound(1000L, w * CrawlEngine.SmallCacheInterpretBelowRows, 100))
     // the two modes set disjoint keys; compiled keeps stage-free class names
     assert(CrawlEngine.roundSettings(interpreted = true) == Map(
       "spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
     assert(CrawlEngine.roundSettings(interpreted = false) ==
       Map("spark.sql.codegen.useIdInClassName" -> "false"))
+  }
+
+  test("a session with a 512-entry codegen cache or more picks the mode of the cache-blind rule") {
+    // the rule before the cache size was an input, with its constants
+    def cacheBlind(frontierRows: Long, corpusRows: Long): Boolean =
+      frontierRows + corpusRows / 8 < 16000L
+    val sizes = (Seq(0L, 1L, 7L, 8L, 9L, 15999L, 16000L, 16001L, 127999L, 128000L, 128008L,
+      CrawlEngine.SmallCacheInterpretBelowRows - 1, CrawlEngine.SmallCacheInterpretBelowRows,
+      8 * CrawlEngine.SmallCacheInterpretBelowRows, Long.MaxValue / 2) ++
+      (0L to 400000L by 4999L)).distinct
+    val differ = for {
+      cache <- Seq(512, 513, 1024, 5000, Int.MaxValue)
+      frontierRows <- sizes
+      corpusRows <- sizes
+      if CrawlEngine.interpretRound(frontierRows, corpusRows, cache) != cacheBlind(frontierRows, corpusRows)
+    } yield (cache, frontierRows, corpusRows)
+    assert(differ.isEmpty, s"(cache, frontier rows, corpus rows) that pick another mode: ${differ.take(5)}")
+  }
+
+  test("every round manifest records execMode: the decision for that round's inputs") {
+    val dir = tmpDir("exec-mode-manifest")
+    val corpus = CorpusTable.create(spark, spec)
+    val store = new SnapshotStore(dir, spark)
+    CrawlEngine.crawl(spark, store, corpus, CorpusGen.seeds(spec), cfg.copy(maxRounds = 3))
+    val ruled = store.latestVersion.get
+    // a forced mode is the decision too: the resumed rounds run compiled
+    CrawlEngine.forcedInterpreted.withValue(Some(false)) {
+      CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec),
+        cfg.copy(maxRounds = 5))
+    }
+    val latest = store.latestVersion.get
+    assert(ruled >= 1 && latest > ruled, s"rule-decided up to v$ruled, latest v$latest")
+    val corpusRows = corpus.count()
+    (1 to latest).foreach { v =>
+      val decided =
+        if (v > ruled) false
+        else CrawlEngine.interpretRound(store.readMeta(v - 1)("nextId").toLong, corpusRows, sessionCacheEntries)
+      assert(store.readMeta(v).get("execMode").contains(CrawlEngine.execMode(decided)),
+        s"v$v: ${store.readMeta(v).get("execMode")}")
+    }
   }
 
   test("an interpreted round compiles no class; caller settings return after a round and a throw") {
@@ -738,7 +795,8 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
                   rows: Long = corpusRows): Option[CrawlEngine.RoundOutcome] = {
       val v = store.latestVersion.get
       val meta = store.readMeta(v)
-      assert(CrawlEngine.interpretRound(meta("nextId").toLong, corpusRows), "state outgrew the threshold")
+      assert(CrawlEngine.interpretRound(meta("nextId").toLong, corpusRows, sessionCacheEntries),
+        "state outgrew the threshold")
       // a tick past every politeness gap, so the round has work
       CrawlEngine.runRound(spark, store, corpusN, rules, prodCfg, v,
         meta("nextRound").toInt + 100, rows, hooks)
@@ -758,12 +816,17 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
       // round compiles again and this fails
       assert(compiles - c0 == 0, s"an interpreted round compiled ${compiles - c0} classes")
       assert(roundSettingValues == caller)
+      assert(store.readMeta(store.latestVersion.get).get("execMode").contains("interpreted"))
 
       // the counter is live: the same frontier over a corpus too large to
-      // interpret runs compiled (the corpus size only picks the mode)
+      // interpret runs compiled (the corpus size only picks the mode). The
+      // shared session keeps Spark's default cache, so the bar is the
+      // small-cache one.
+      assert(sessionCacheEntries < CrawlEngine.CodegenCacheMaxEntries)
       val c1 = compiles
-      assert(nextRound(rows = CrawlEngine.CorpusRowsPerFrontierRow * CrawlEngine.InterpretBelowRows).isDefined)
+      assert(nextRound(rows = CrawlEngine.CorpusRowsPerFrontierRow * CrawlEngine.SmallCacheInterpretBelowRows).isDefined)
       assert(compiles - c1 > 0, "a round over a large corpus compiled nothing")
+      assert(store.readMeta(store.latestVersion.get).get("execMode").contains("compiled"))
       assert(roundSettingValues == caller)
 
       val failingSink = PipelineHooks(rawSinks = Seq(new RawSink {
