@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * run the identical frontier-round job at `local[cores]` and print one
   * JSON line. Each level runs in its OWN JVM (same-JVM back-to-back runs
   * poison the second measurement via GC/cache pressure — measured 2x);
-  * `tools/scaling.sh` invokes both levels and appends the efficiency row
-  * to BENCH.md.
+  * `tools/scaling_multi.sh LOW HIGH DRAWS` invokes both levels per draw
+  * and `tools/scaling_median.py` reports the efficiency.
   *
   * Usage: runMain graft.ScalingBench <cores>
   */
@@ -20,7 +20,7 @@ object ScalingBench {
     val budget = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "500000").toInt
     val textRepeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_TEXT_REPEAT", "16").toInt
     // Snapshot state and shuffle dirs go to SPARK_GRAFT_TMPDIR (tools/
-    // scaling.sh points it at tmpfs): on one box the single data disk is
+    // scaling_multi.sh points it at tmpfs): on one box the single data disk is
     // the anti-scaling artifact — cluster storage (HDFS/S3) adds bandwidth
     // with executors, RAM-backed fs is the honest single-box analog.
     val tmpBase = sys.env.getOrElse("SPARK_GRAFT_TMPDIR", System.getProperty("java.io.tmpdir"))

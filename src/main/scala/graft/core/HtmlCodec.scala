@@ -109,9 +109,6 @@ object HtmlCodec {
     out.toSeq
   }
 
-  def extractLinksBytes(html: Array[Byte]): Seq[String] =
-    extractLinks(new String(html, StandardCharsets.UTF_8))
-
   /** The reference's link filter (`HabrParser.scala:22-26`): keep hrefs that
     * are site-relative or mention the base domain. */
   def keepLink(href: String, baseDomain: String): Boolean =

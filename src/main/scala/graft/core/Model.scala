@@ -1,13 +1,11 @@
 package graft.core
 
-import java.sql.Timestamp
-
 /** Core data model for the Spark-native crawl engine.
   *
   * Mirrors the reference's queue-row semantics (jaitl/cloud-crawler:
   * `master/src/main/scala/.../queue/provider/MongoQueueTaskProvider.scala:151-159`,
   * `master-client/src/main/protobuf/task.proto:7-17`) re-expressed as typed
-  * Spark Datasets. See /root/repo/SURVEY.md §1.4.
+  * Spark Datasets. See SURVEY.md §1.4.
   */
 object TaskStatus {
   // Exact literals from the reference
@@ -32,59 +30,6 @@ object Outcome {
   val ParsingFailed = "parsingFailed" // ParsingException → taskParsingFailed
   val GenericFailed = "genericFailed" // other → attempt+1, taskFailed at cap
 }
-
-/** One frontier entry (the persistent URL-queue row).
-  *
-  * `id` is the monotone discovery sequence — it is the total-order tiebreak
-  * that replaces Mongo ObjectId insertion order, making crawl order a pure
-  * function of the data (SURVEY.md §7.4 risk 1).
-  */
-case class FrontierEntry(
-    id: Long,
-    url: String,
-    urlNorm: String,
-    host: String,
-    status: String,
-    attempt: Int,
-    priority: Int,
-    warcTs: Option[Long], // corpus capture time (micros), ranking key
-    discoveredRound: Int,
-    projectId: String,    // owning project (task.proto:13)
-    taskType: String      // lease multiplexing key (task.proto:8)
-    // NOTE deliberately no lastUpdate: the engine is bulk-synchronous —
-    // a round either commits fully or not at all, so no row is ever
-    // observably "in progress" (the reference's lease timestamp,
-    // `MongoQueueTaskProvider.scala:104-108`, exists to recover from
-    // workers dying mid-batch; here F7/F8 fall out of the snapshot commit)
-)
-
-/** Per-host politeness + circuit-breaker state (TorResourceController
-  * analog): a host may not be fetched before `nextTick`; `failCount`
-  * accumulates fetch failures and at `CrawlConfig.maxHostFailures` the
-  * host is closed (D3 `NoResourcesAvailable`,
-  * `TorResourceController.scala:59-60,86-96`). */
-case class HostState(host: String, nextTick: Long, failCount: Int)
-
-/** A page in the Common-Crawl-style corpus (BASELINE.json input_hint). */
-case class PageRow(
-    url: String,
-    warc_ts: Timestamp,
-    html: Array[Byte],
-    text: String,
-    lang: String
-)
-
-/** One scheduled fetch with its outcome — the engine's per-round output row.
-  * `(round, seq)` is the crawl-order contract checked against the simulator. */
-case class FetchRecord(
-    round: Int,
-    seq: Int,
-    id: Long,
-    urlNorm: String,
-    outcome: String,
-    extractedText: Option[String],
-    nNewLinks: Int
-)
 
 /** One crawl project (`configuration.proto:14-24` + `task.proto:13-15`):
   * tasks of `taskType` belong to `projectId`; links they discover are
@@ -162,7 +107,6 @@ case class CrawlConfig(
     // clean restart point. 0 disables. `maxRounds` stays as the
     // deterministic count cap (tests and simulator parity use it).
     maxWallSecs: Long = 0L,
-    seed: Long = 42L,
     // R7 partitioned bloom URL-seen set: pre-filters the discovered-link
     // anti-join (exact confirm still runs on "maybe" rows — no-false-
     // negative invariant keeps membership exact). Shards persist in each

@@ -1,16 +1,16 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Bytes-native page parse (H1/H2) — the DRAM-bandwidth upgrade of the
-  * parse-UDF route (`CrawlEngine.parseUdf`).
+  * parse-UDF route (`CrawlEngine.parseUdf`). [[ParseFunctions.htmlParse]]
+  * calls [[ParseExpressions.parseHtml]] through Catalyst's `StaticInvoke`,
+  * from generated code or, in an interpreted plan, by reflection.
   *
   * The UDF route pays, per page: UTF8String → java.lang.String (UTF-16
   * decode, 2× the bytes written), `indexOf`/`substring`/unescape over the
@@ -110,7 +110,7 @@ object ParseExpressions {
     (href.length > 0 && href(0) == '/') ||
       (host != null && indexOf(href, 0, host) >= 0)
 
-  /** Static entry point referenced from generated code. Never returns
+  /** The static entry point `StaticInvoke` calls. Never returns
     * null: a missing/malformed page is (null text, empty links), exactly
     * `Parsed(None, Nil)` on the UDF path. */
   def parseHtml(html: UTF8String, host: UTF8String): InternalRow = {
@@ -148,46 +148,21 @@ object ParseExpressions {
   }
 }
 
-/** `graft_html_parse(html, host)` → struct<text: string, links: array<string>>.
-  * Null-tolerant on both sides (handled inside [[ParseExpressions.parseHtml]],
-  * so the row itself is never null — same shape the parse UDF produced). */
-case class HtmlParseExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("text", StringType, nullable = true),
-    StructField("links", ArrayType(StringType, containsNull = true), nullable = true)))
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_html_parse"
-
-  override def eval(input: InternalRow): Any =
-    ParseExpressions.parseHtml(
-      left.eval(input).asInstanceOf[UTF8String],
-      right.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = ParseExpressions.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(
-      code = code"""
-        |${leftGen.code}
-        |${rightGen.code}
-        |$javaType ${ev.value} = $helper.parseHtml(
-        |  ${leftGen.isNull} ? null : ${leftGen.value},
-        |  ${rightGen.isNull} ? null : ${rightGen.value});
-        |boolean ${ev.isNull} = false;
-      """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HtmlParseExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Column builder for the native parse (what CrawlEngine's hot path calls). */
+/** Column builder for the native parse (what CrawlEngine's hot path calls):
+  * `graft_html_parse(html, host)` → struct<text: string, links: array<string>>.
+  * Null-tolerant on both sides: a null reaches [[ParseExpressions.parseHtml]],
+  * so the row itself is never null — same shape the parse UDF produced. */
 object ParseFunctions {
   import org.apache.spark.sql.{Column, GraftBridge}
+
+  val ParsedType: StructType = StructType(Seq(
+    StructField("text", StringType, nullable = true),
+    StructField("links", ArrayType(StringType, containsNull = true), nullable = true)))
+
+  private[expressions] def invoke(args: Seq[Expression]): Expression =
+    StaticInvoke(ParseExpressions.getClass, ParsedType, "parseHtml", args,
+      inputTypes = Seq(StringType, StringType), propagateNull = false, returnNullable = false)
+
   def htmlParse(html: Column, host: Column): Column =
-    GraftBridge.column(HtmlParseExpr(
-      GraftBridge.expression(html), GraftBridge.expression(host)))
+    GraftBridge.column(invoke(Seq(html, host).map(GraftBridge.expression)))
 }

@@ -2,25 +2,28 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.UrlNormalizer
 
-/** Native Catalyst expressions for the URL scalar functions — the codegen
-  * upgrade path from the engine's Scala UDFs (SURVEY.md §4.3.5): no
+/** Static helpers behind the URL scalar functions (SURVEY.md §4.3.5). The
+  * column builders in [[UrlFunctions]] call them through Catalyst's
+  * `StaticInvoke`, the way Spark's own `url_encode` calls its codec: no
   * serialization round-trip, null handling inlined, and the call sits
   * inside the surrounding whole-stage-codegen'd Project instead of
-  * breaking it the way a UDF does.
+  * breaking it the way a UDF does. Interpreted plans call the same helper
+  * by reflection.
   *
-  * Registered via [[GraftExtensions]] (`spark.sql.extensions=
+  * [[GraftExtensions]] registers them for SQL (`spark.sql.extensions=
   * graft.functions.expressions.GraftExtensions` on spark-submit) as
-  * `graft_url_normalize` / `graft_surt_host`.
+  * `graft_url_normalize` / `graft_surt_host` / `graft_url_host` /
+  * `graft_url_path` / `graft_url_resolve`.
   */
 object UrlExpressions {
-  // static entry points referenced from generated code
+  /** RFC 3986 normalization (null ⇒ unfetchable). */
   def normalizeOrNull(u: UTF8String): UTF8String =
     if (u == null) null
     else UrlNormalizer.normalize(u.toString) match {
@@ -28,18 +31,23 @@ object UrlExpressions {
       case None => null
     }
 
+  /** SURT host reversal of a URL's host. */
   def surtHost(u: UTF8String): UTF8String =
     if (u == null) null
     else UTF8String.fromString(UrlNormalizer.surtHost(UrlNormalizer.hostOf(u.toString)))
 
+  /** Host of a normalized URL. */
   def hostOf(u: UTF8String): UTF8String =
     if (u == null) null
     else UTF8String.fromString(UrlNormalizer.hostOf(u.toString))
 
+  /** Path (sans query/fragment) of a normalized URL. */
   def pathOf(u: UTF8String): UTF8String =
     if (u == null) null
     else UTF8String.fromString(UrlNormalizer.pathOf(u.toString))
 
+  /** Resolve a (possibly relative) href against a base URL and normalize
+    * (null ⇒ unresolvable) — the H2→H4 link-discovery hot path. */
   def resolveOrNull(base: UTF8String, href: UTF8String): UTF8String =
     if (base == null || href == null) null
     else UrlNormalizer.resolve(base.toString, href.toString) match {
@@ -48,135 +56,45 @@ object UrlExpressions {
     }
 }
 
-/** RFC 3986 normalization (null ⇒ unfetchable), codegen'd. */
-case class UrlNormalizeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_url_normalize"
-
-  override def nullSafeEval(input: Any): Any =
-    UrlExpressions.normalizeOrNull(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = UrlExpressions.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = $helper.normalizeOrNull($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): UrlNormalizeExpr =
-    copy(child = newChild)
-}
-
-/** SURT host reversal of a URL's host, codegen'd. */
-case class SurtHostExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_surt_host"
-
-  override def nullSafeEval(input: Any): Any =
-    UrlExpressions.surtHost(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = UrlExpressions.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.surtHost($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SurtHostExpr =
-    copy(child = newChild)
-}
-
-/** Host of a normalized URL, codegen'd. */
-case class UrlHostOfExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_url_host"
-
-  override def nullSafeEval(input: Any): Any =
-    UrlExpressions.hostOf(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = UrlExpressions.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.hostOf($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): UrlHostOfExpr =
-    copy(child = newChild)
-}
-
-/** Path (sans query/fragment) of a normalized URL, codegen'd. */
-case class UrlPathOfExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_url_path"
-
-  override def nullSafeEval(input: Any): Any =
-    UrlExpressions.pathOf(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = UrlExpressions.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.pathOf($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): UrlPathOfExpr =
-    copy(child = newChild)
-}
-
-/** Resolve a (possibly relative) href against a base URL and normalize
-  * (null ⇒ unresolvable), codegen'd — the H2→H4 link-discovery hot path. */
-case class UrlResolveExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_url_resolve"
-
-  override def nullSafeEval(base: Any, href: Any): Any =
-    UrlExpressions.resolveOrNull(base.asInstanceOf[UTF8String], href.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = UrlExpressions.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (b, h) =>
-      s"""
-         |${ev.value} = $helper.resolveOrNull($b, $h);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): UrlResolveExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Column builders over the native expressions — what the engine calls
-  * directly (no function-registry round trip, no UDF serialization; the
-  * call stays inside the surrounding WholeStageCodegen span). */
+/** Column builders over the URL helpers — what the engine calls directly
+  * (no function-registry round trip, no UDF serialization; the call stays
+  * inside the surrounding WholeStageCodegen span). A null argument yields
+  * null without calling the helper. */
 object UrlFunctions {
   import org.apache.spark.sql.{Column, GraftBridge}
-  private def e(c: Column): Expression = GraftBridge.expression(c)
 
-  def urlNormalize(u: Column): Column = GraftBridge.column(UrlNormalizeExpr(e(u)))
-  def surtHost(u: Column): Column = GraftBridge.column(SurtHostExpr(e(u)))
-  def urlHost(u: Column): Column = GraftBridge.column(UrlHostOfExpr(e(u)))
-  def urlPath(u: Column): Column = GraftBridge.column(UrlPathOfExpr(e(u)))
-  def urlResolve(base: Column, href: Column): Column =
-    GraftBridge.column(UrlResolveExpr(e(base), e(href)))
+  /** `UrlExpressions.<helper>` over `arity` string arguments; a call with
+    * another argument count fails analysis. */
+  private[expressions] def invoke(helper: String, arity: Int)(args: Seq[Expression]): Expression =
+    StaticInvoke(UrlExpressions.getClass, StringType, helper, args,
+      inputTypes = Seq.fill(arity)(StringType))
+
+  private def call(helper: String, args: Column*): Column =
+    GraftBridge.column(invoke(helper, args.size)(args.map(GraftBridge.expression)))
+
+  def urlNormalize(u: Column): Column = call("normalizeOrNull", u)
+  def surtHost(u: Column): Column = call("surtHost", u)
+  def urlHost(u: Column): Column = call("hostOf", u)
+  def urlPath(u: Column): Column = call("pathOf", u)
+  def urlResolve(base: Column, href: Column): Column = call("resolveOrNull", base, href)
 }
 
-/** `SparkSessionExtensions` hook registering the native URL functions for
-  * SQL users (`spark.sql.extensions=graft.functions.expressions.
-  * GraftExtensions`); Scala callers use [[UrlFunctions]] directly. */
+/** `SparkSessionExtensions` hook registering the URL functions and the page
+  * parse for SQL users (`spark.sql.extensions=graft.functions.expressions.
+  * GraftExtensions`); Scala callers use [[UrlFunctions]] and
+  * [[ParseFunctions]] directly. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    def inject(name: String, clazz: Class[_], builder: Seq[Expression] => Expression): Unit =
+    def inject(name: String, helpers: Object, builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
-        new FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder))
-    inject("graft_url_normalize", classOf[UrlNormalizeExpr], cs => UrlNormalizeExpr(cs.head))
-    inject("graft_surt_host", classOf[SurtHostExpr], cs => SurtHostExpr(cs.head))
-    inject("graft_url_host", classOf[UrlHostOfExpr], cs => UrlHostOfExpr(cs.head))
-    inject("graft_url_path", classOf[UrlPathOfExpr], cs => UrlPathOfExpr(cs.head))
-    inject("graft_url_resolve", classOf[UrlResolveExpr], cs => UrlResolveExpr(cs(0), cs(1)))
-    inject("graft_html_parse", classOf[HtmlParseExpr], cs => HtmlParseExpr(cs(0), cs(1)))
+        new FunctionIdentifier(name), new ExpressionInfo(helpers.getClass.getName, name), builder))
+    def url(name: String, helper: String, arity: Int = 1): Unit =
+      inject(name, UrlExpressions, UrlFunctions.invoke(helper, arity))
+    url("graft_url_normalize", "normalizeOrNull")
+    url("graft_surt_host", "surtHost")
+    url("graft_url_host", "hostOf")
+    url("graft_url_path", "pathOf")
+    url("graft_url_resolve", "resolveOrNull", arity = 2)
+    inject("graft_html_parse", ParseExpressions, ParseFunctions.invoke)
   }
 }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -97,6 +95,4 @@ object Multimodal {
       .select(col("doc_id"), col("n_bytes"), col("media_type"),
         col("width"), col("height"), col("n_frames"), col("checksum_hex"))
   }
-
-  private[operators] def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 }

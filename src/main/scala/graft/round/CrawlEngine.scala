@@ -41,10 +41,10 @@ object CrawlEngine {
 
   private val IoLang = "^xx-io(\\d+)$".r
 
-  // ---- leaf URL scalar functions: native codegen'd Catalyst expressions
-  // (graft.functions.expressions) — unlike UDFs they keep the rank/dedup
-  // projections inside WholeStageCodegen and skip the serialization round
-  // trip on every row of the link-discovery path.
+  // ---- leaf URL scalar functions: static helpers called through Catalyst's
+  // StaticInvoke (graft.functions.expressions) — unlike UDFs they keep the
+  // rank/dedup projections inside WholeStageCodegen and skip the
+  // serialization round trip on every row of the link-discovery path.
   import graft.functions.expressions.UrlFunctions.{urlNormalize, urlHost, urlPath, urlResolve}
   /** Parser UDF from a pluggable [[PageParser]] (pipeline seam H1/H2): a
     * round parses through it when the crawl's parser is not
@@ -53,7 +53,7 @@ object CrawlEngine {
     udf((html: String, host: String) => parser.parse(html, host))
   /** [[DefaultParser]] as a UDF. Rounds and robots bodies parse with the
     * bytes-native `ParseFunctions.htmlParse`; this is the reference
-    * HtmlParseExprSpec compares that expression against. */
+    * HtmlParseExprSpec compares that column against. */
   val parseUdf = parseUdfOf(DefaultParser)
   val ioFailUntilUdf = udf((lang: String) => lang match {
     case IoLang(n) => n.toInt
@@ -401,7 +401,7 @@ object CrawlEngine {
       bootstrapMeta(rows.size, observedLong(obs, "waits"), cfg), seen = seen0)
   }
 
-  final case class RoundOutcome(selectedCount: Long, newLinkCount: Long)
+  final case class RoundOutcome(selectedCount: Long)
 
   /** Distributed exact global rank: `seqCol` = 1-based rank of each row by
     * `order`, computed without ever sorting on one partition or merging on
@@ -698,9 +698,9 @@ object CrawlEngine {
       // chains parse after a successful fetch), and skipping them here both
       // matches the simulator's null extractedText and avoids paying the
       // parse UDF for doomed rows (the `when` guard short-circuits per row).
-      // DefaultParser runs as the bytes-native HtmlParseExpr (no UTF-16
-      // round trip — the fetch stage is DRAM-bound, see HtmlParseExpr doc);
-      // a custom PageParser keeps the UDF seam.
+      // DefaultParser runs as the bytes-native ParseFunctions.htmlParse (no
+      // UTF-16 round trip — the fetch stage is DRAM-bound, see the
+      // ParseExpressions doc); a custom PageParser keeps the UDF seam.
       val roundParse: (Column, Column) => Column =
         if (hooks.parser eq DefaultParser)
           graft.functions.expressions.ParseFunctions.htmlParse
@@ -1035,7 +1035,7 @@ object CrawlEngine {
         System.err.println(w)
         hooks.notifiers.foreach(_.onWarning(w))
       }
-      Some(RoundOutcome(selectedCount, observedLong(obs, "newLinks")))
+      Some(RoundOutcome(selectedCount))
     } finally {
       restoreSettings()
       caches.foreach(_.unpersist(blocking = true))

@@ -20,4 +20,16 @@ object SharedSpark {
 
 trait SparkSpec {
   lazy val spark: SparkSession = SharedSpark.spark
+
+  /** Runs `body` with the given session settings, then restores the
+    * caller's values, on return and on throw. */
+  def withConf[T](settings: Map[String, String])(body: => T): T = {
+    val callerValues = settings.keys.map(k => k -> spark.conf.getOption(k))
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally callerValues.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -1,29 +1,30 @@
 package graft.functions
 
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Arbitrary, Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 import graft.core.{HtmlCodec, PropHelper}
-import graft.functions.expressions.{HtmlParseExpr, ParseFunctions}
+import graft.functions.expressions.ParseFunctions
 import graft.round.{CrawlEngine, DefaultParser}
 
-/** The bytes-native HtmlParseExpr must agree byte-for-byte with
-  * DefaultParser.parse (the UDF it replaces in the engine hot path) for
-  * ALL inputs — including escapes, unicode, malformed html and nulls —
+/** The bytes-native `ParseFunctions.htmlParse` must agree byte-for-byte
+  * with DefaultParser.parse (the UDF it replaces in the engine hot path)
+  * for ALL inputs — including escapes, unicode, malformed html and nulls —
   * on both the interpreted and the codegen evaluation paths. */
 class HtmlParseExprSpec extends AnyFunSuite with SparkSpec with PropHelper {
 
   /** Interpreted-path evaluation straight through Expression.eval. */
   private def evalExpr(html: String, host: String): (Option[String], Seq[String]) = {
-    val row = HtmlParseExpr(
-      Literal.create(html, org.apache.spark.sql.types.StringType),
-      Literal.create(host, org.apache.spark.sql.types.StringType))
+    def str(s: String) = GraftBridge.column(Literal.create(s, StringType))
+    val row = GraftBridge.expression(ParseFunctions.htmlParse(str(html), str(host)))
       .eval(InternalRow.empty).asInstanceOf[InternalRow]
     val text = Option(row.getUTF8String(0)).map(_.toString)
     val arr = row.get(1, null).asInstanceOf[ArrayData]
@@ -80,21 +81,21 @@ class HtmlParseExprSpec extends AnyFunSuite with SparkSpec with PropHelper {
       ("<article>never closed", "h.example"),
       ("<html>none</html>", "h.example"),
       (null, "h.example"))
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    // the excluded rule would fold the projection over the local rows into
+    // the relation by interpreted evaluation, so the plan would run no codegen
+    withConf(Map("spark.sql.codegen.fallback" -> "false", "spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")) {
       val df = rows.toDF("htmlStr", "host")
         .withColumn("native", ParseFunctions.htmlParse(col("htmlStr"), col("host")))
         .withColumn("viaUdf", CrawlEngine.parseUdf(col("htmlStr"), col("host")))
-      val out = df.select("native.text", "native.links", "viaUdf.text", "viaUdf.links").collect()
+        .select("native.text", "native.links", "viaUdf.text", "viaUdf.links")
+      val out = df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("*("), s"not codegen'd:\n$plan")
+      assert(out.length == rows.size)
       out.foreach { r =>
         assert(Option(r.getString(0)) == Option(r.getString(2)))
         assert(r.getSeq[String](1) == r.getSeq[String](3))
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-        case None => spark.conf.unset("spark.sql.codegen.fallback")
       }
     }
   }

@@ -107,9 +107,9 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("compiled rounds (forced) match the simulator too: order, text, final frontier") {
-    // the same parity through whole-stage codegen: the custom expressions'
-    // doGenCode (HtmlParseExpr text, UrlExpressions link resolution)
-    // instead of their interpreted eval
+    // the same parity through whole-stage codegen: the StaticInvoke calls
+    // of the page parse and the URL helpers run as generated code instead
+    // of by reflection
     val (stateDir, summary) = seededCrawl(Some(false))
     assert(summary.fetches > 0)
     assertOrderMatchesSimulator(stateDir)
