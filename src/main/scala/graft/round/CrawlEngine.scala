@@ -1,6 +1,7 @@
 package graft.round
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core._
@@ -10,7 +11,9 @@ import graft.frontier.SnapshotStore
   * scheduler, one bulk-synchronous round per snapshot commit
   * (SURVEY.md §3.1 rebuild). Declarative Dataset/Catalyst throughout —
   * windows for ranking, joins for fetch/dedup, `when` chains for the status
-  * machine; UDFs only at the leaves (normalize/resolve/parse).
+  * machine. URL normalize/resolve and the page parse are `StaticInvoke`
+  * calls of static helpers; the only UDFs left are the robots rules
+  * (parse, verdict) and the test corpus's `ioFailUntil`.
   *
   * Scale design (north rule: 10^10-URL frontier, 1000 executors):
   *  - corpus joins are bounded by (new inserts + round selection), never by
@@ -612,9 +615,18 @@ object CrawlEngine {
     val cacheEntries = spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt
     val interpreted = forcedInterpreted.value.getOrElse(interpretRound(nextId, corpusRows, cacheEntries))
     val restoreSettings = applyRoundSettings(spark, interpreted)
-    // every cache the round builds, released however the round ends
+    // every cache and persisted leaf the round builds, released however
+    // the round ends
     val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def persisted(df: DataFrame): DataFrame = { caches += df.persist(); df }
+    val leafRows = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    // the plan cut at a materialization point: every later query starts
+    // from a leaf over the persisted rows, so it analyses, plans and
+    // describes only its own operators, not the whole round
+    def leaf(df: DataFrame): DataFrame = {
+      val (l, rows) = GraftBridge.persistedLeaf(df)
+      leafRows += rows
+      l
+    }
     try {
       import spark.implicits._
 
@@ -660,13 +672,16 @@ object CrawlEngine {
 
       // R1 two-step salted per-host rank (skew-proof top-k)
       val salts = 8
-      val w1 = Window.partitionBy(col("host"), col("salt")).orderBy(FetchOrder: _*)
+      val w1 = Window.partitionBy(col("host"), pmod(xxhash64(col("urlNorm")), lit(salts)))
+        .orderBy(FetchOrder: _*)
       val w2 = Window.partitionBy(col("host")).orderBy(FetchOrder: _*)
+      val eligibleCols = eligible.columns.toSeq.map(col)
       val perHost = eligible
-        .withColumn("salt", pmod(xxhash64(col("urlNorm")), lit(salts)))
-        .withColumn("r1", row_number().over(w1)).filter(col("r1") <= cfg.hostBudgetPerRound)
-        .withColumn("r2", row_number().over(w2)).filter(col("r2") <= cfg.hostBudgetPerRound)
-        .drop("salt", "r1", "r2")
+        .select(eligibleCols :+ row_number().over(w1).as("r1"): _*)
+        .filter(col("r1") <= cfg.hostBudgetPerRound)
+        .select(eligibleCols :+ row_number().over(w2).as("r2"): _*)
+        .filter(col("r2") <= cfg.hostBudgetPerRound)
+        .drop("r2")
 
       // R2 global cut via distributed exact rank (no driver merge, no
       // single-partition sort), then keep the ≤ roundBudget head.
@@ -684,10 +699,9 @@ object CrawlEngine {
       if (selectedCount == 0) return None
       val selected = ranked
         .filter(col("seqL") <= cfg.roundBudget)
-        .withColumn("seq", col("seqL").cast("int"))
-        .drop("seqL", "__pid")
-        // B5/B6: validator-flagged rows bypass the fetch and end taskSkipped
-        .withColumn("skipped", hooks.validator.getOrElse(lit(false)))
+        .select(eligibleCols ++ Seq(col("seqL").cast("int").as("seq"),
+          // B5/B6: validator-flagged rows bypass the fetch and end taskSkipped
+          hooks.validator.getOrElse(lit(false)).as("skipped")): _*)
 
       // C4 fetch join (bounded by roundBudget) + G1 outcome taxonomy.
       // shuffle_hash hint: a sort-merge join would RE-SORT the corpus side
@@ -705,21 +719,21 @@ object CrawlEngine {
         if (hooks.parser eq DefaultParser)
           graft.functions.expressions.ParseFunctions.htmlParse
         else { val u = parseUdfOf(hooks.parser); (h, s) => u(h, s) }
+      val ioFailing = ioFailUntilUdf(col("lang")) > round
       val fetchedWide = selected.hint("shuffle_hash")
         .join(corpusN.select("urlNorm", "htmlStr", "lang"), Seq("urlNorm"), "left")
-        .withColumn("ioUntil", ioFailUntilUdf(col("lang")))
         .withColumn("parsed",
           when(!col("skipped") && col("htmlStr").isNotNull && col("lang") =!= "xx-ban" &&
-            col("lang") =!= "xx-gen" && !(col("ioUntil") > round),
+            col("lang") =!= "xx-gen" && !ioFailing,
             roundParse(col("htmlStr"), col("host"))))
-        .withColumn("outcome",
-          when(col("skipped"), Outcome.Skipped)
-            .when(col("htmlStr").isNull, Outcome.NotFound)
-            .when(col("lang") === "xx-ban", Outcome.Banned)
-            .when(col("ioUntil") > round, Outcome.IoFailed)
-            .when(col("lang") === "xx-gen", Outcome.GenericFailed)
-            .when(col("parsed.text").isNull, Outcome.ParsingFailed)
-            .otherwise(Outcome.Success))
+      val outcome =
+        when(col("skipped"), Outcome.Skipped)
+          .when(col("htmlStr").isNull, Outcome.NotFound)
+          .when(col("lang") === "xx-ban", Outcome.Banned)
+          .when(ioFailing, Outcome.IoFailed)
+          .when(col("lang") === "xx-gen", Outcome.GenericFailed)
+          .when(col("parsed.text").isNull, Outcome.ParsingFailed)
+          .otherwise(Outcome.Success)
       // persist ONLY what the round's consumers (records, link discovery,
       // status/host updates, raw sinks) read back. htmlStr is the widest
       // column in the row and is needed again only by a raw sink — caching
@@ -727,9 +741,10 @@ object CrawlEngine {
       // block store every round for nothing (measured: the fetch stage is
       // bandwidth-bound; the cache write is pure overhead in the common
       // no-raw-sink configuration).
-      val fetchedCols = Seq("id", "seq", "urlNorm", "host", "projectId",
-        "outcome", "parsed") ++ (if (hooks.rawSinks.nonEmpty) Seq("htmlStr") else Nil)
-      val fetched = persisted(fetchedWide.select(fetchedCols.map(col): _*))
+      val fetchedCols = Seq("id", "seq", "urlNorm", "host", "projectId").map(col) ++
+        Seq(outcome.as("outcome"), col("parsed")) ++
+        (if (hooks.rawSinks.nonEmpty) Seq(col("htmlStr")) else Nil)
+      val fetched = leaf(fetchedWide.select(fetchedCols: _*))
 
       // fetch records (the crawl-order contract surface). The D1 per-outcome
       // report rides the results write as an Observation and lands in the
@@ -755,11 +770,11 @@ object CrawlEngine {
         .select(col("seq"), col("urlNorm").as("parentUrl"),
           col("projectId").as("parentProject"),
           posexplode(col("parsed.links")).as(Seq("pos", "href")))
-        .withColumn("newNorm", urlResolve(col("parentUrl"), col("href")))
+        // parentUrl/href serve only the resolution — dropped before the
+        // dedup window shuffles every link row
+        .select(col("seq"), col("pos"), col("parentProject"),
+          urlResolve(col("parentUrl"), col("href")).as("newNorm"))
         .filter(col("newNorm").isNotNull)
-        // parentUrl/href served their purpose (resolution) — drop them
-        // before the dedup window shuffles every link row
-        .select("seq", "pos", "parentProject", "newNorm")
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("newNorm")).orderBy(col("seq"), col("pos"))))
         .filter(col("rn") === 1)
@@ -795,7 +810,7 @@ object CrawlEngine {
           else // the previous round ran without the seen filter (a resume
             // that turns it on): build the shards from the frontier, once
             // for the probe and the commit
-            persisted(shardsOf(frontier.select("urlNorm"), effCapacity)))
+            leaf(shardsOf(frontier.select("urlNorm"), effCapacity)))
       // (anti-joins hinted shuffle_hash for the same no-re-sort reason)
       val seenSet = frontier.select(col("urlNorm").as("newNorm")).hint("shuffle_hash")
       val newLinks = seenShards match {
@@ -814,6 +829,7 @@ object CrawlEngine {
       // project's task type; unknown parents keep their own project.
       val nextByProject = typedLit(cfg.projects.map(p => p.projectId -> p.nextProjectId).toMap)
       val typeByProject = typedLit(cfg.projects.map(p => p.projectId -> p.taskType).toMap)
+      val projectId = coalesce(element_at(nextByProject, col("parentProject")), col("parentProject"))
       val newBase = newRanked
         .select(
           (col("idx") + lit(nextId - 1)).as("id"),
@@ -821,21 +837,22 @@ object CrawlEngine {
           urlHost(col("newNorm")).as("host"),
           lit(0).as("attempt"), lit(0).as("priority"),
           lit(round + 1).as("discoveredRound"),
-          coalesce(element_at(nextByProject, col("parentProject")), col("parentProject"))
-            .as("projectId"))
-        .withColumn("taskType",
-          coalesce(element_at(typeByProject, col("projectId")),
-            lit(cfg.projects.head.taskType)))
+          projectId.as("projectId"),
+          coalesce(element_at(typeByProject, projectId), lit(cfg.projects.head.taskType))
+            .as("taskType"))
       // build the capture join's hash on the new-link side: never sort or
       // move the corpus
-      val discovered = persisted(admitted(newBase.hint("shuffle_hash"), corpusN, rulesDf)
+      val discovered = leaf(admitted(newBase.hint("shuffle_hash"), corpusN, rulesDf)
         .transform(df => if (carrySource) df.withColumn("source", lit(null).cast("string")) else df))
 
       // G2/G3 + D1: status machine via outcome join on id. No broadcast
       // hint: outcomes is ≤ roundBudget rows — forcing a broadcast made the
       // driver collect+build a multi-million-row hash relation per round
       // (serial, ∝ round size — measured as the 32-core scaling ceiling).
-      // AQE sees the cached size and still broadcasts genuinely small rounds.
+      // The fetched leaf carries the fetch join's estimated statistics, not
+      // the size of its persisted rows, so the static plan does not
+      // broadcast it; AQE re-plans on the runtime size of the shuffle it
+      // reads and may still broadcast genuinely small rounds.
       // A12 write-back: the outcome join also carries the round's successful
       // extractedText and the frontier rewrite merges it into a `source`
       // column — the same-commit twin of `update projects_url set source=…
@@ -850,21 +867,24 @@ object CrawlEngine {
           frontier.withColumn("source", lit(null).cast("string"))
         else frontier
       // the rows this round touched: its leased rows with their new status
-      val touched = frontierForUpdate
-        .join(outcomes, Seq("id"), "inner")
-        .withColumn("attempt",
+      // (a generic failure counts one more attempt)
+      val newState = Map(
+        "attempt" ->
           when(col("outcome") === Outcome.GenericFailed, col("attempt") + 1)
-            .otherwise(col("attempt")))
-        .withColumn("status",
+            .otherwise(col("attempt")),
+        "status" ->
           when(col("outcome").isin(Outcome.Success, Outcome.Banned), TaskStatus.Finished)
             .when(col("outcome").isin(Outcome.NotFound, Outcome.Skipped), TaskStatus.Skipped)
             .when(col("outcome") === Outcome.ParsingFailed, TaskStatus.ParsingFailed)
             .when(col("outcome") === Outcome.IoFailed, TaskStatus.Wait)
             .when(col("outcome") === Outcome.GenericFailed,
-              when(col("attempt") >= cfg.maxAttempts, TaskStatus.Failed)
+              when(col("attempt") + 1 >= cfg.maxAttempts, TaskStatus.Failed)
                 .otherwise(TaskStatus.Wait))
             .otherwise(col("status")))
-        .select((SnapshotStore.FrontierSchema.fieldNames.toSeq.map(col) ++
+      val touched = frontierForUpdate
+        .join(outcomes, Seq("id"), "inner")
+        .select((SnapshotStore.FrontierSchema.fieldNames.toSeq.map(f =>
+          newState.get(f).fold(col(f))(_.as(f))) ++
           // write-back: a success this round overwrites source; every other
           // row keeps what it had (null until its first successful fetch).
           // Sink absent but column present: carry it through untouched.
@@ -877,7 +897,7 @@ object CrawlEngine {
       // separate discovered.count() job (new rows are exactly those tagged
       // discoveredRound == round+1)
       val obs = org.apache.spark.sql.Observation(s"commit-v${version + 1}")
-      // the keys a compaction replaces come from the fetched cache, apart
+      // the keys a compaction replaces come from the fetched leaf, apart
       // from the rows (which join the previous frontier): the leased ids.
       // Discovered ids are new (≥ nextId), so no earlier version holds them.
       val frontierChanges = SnapshotStore.Changes(
@@ -891,37 +911,34 @@ object CrawlEngine {
       // closed for good (nextTick = DeadTick).
       // reopen tick as pure columns: ban backoff, else max(deterministic
       // politeness delay, robots crawl-delay joined from the rules Dataset)
+      val rbDelayTicks = if (rulesDf.isEmpty) lit(0L) else coalesce(col("rbDelayTicks"), lit(0L))
       val hostUpdates = fetched.groupBy(col("host"))
         .agg(
           max(when(col("outcome") === Outcome.Banned, 1).otherwise(0)).as("bannedFlag"),
           sum(when(col("outcome").isin(Outcome.IoFailed, Outcome.GenericFailed), 1)
             .otherwise(0)).cast("int").as("nFails"))
-        .transform(df => rulesDf match {
-          case None => df.withColumn("rbDelayTicks", lit(0L))
-          case Some(rules) =>
-            df.join(rules.select(col("host"), col("rbDelayTicks")), Seq("host"), "left")
-        })
-        .withColumn("newTick",
-          lit(round + 1) + when(col("bannedFlag") === 1, lit(cfg.banBackoffTicks))
+        .transform(df => rulesDf.fold(df)(rules =>
+          df.join(rules.select(col("host"), col("rbDelayTicks")), Seq("host"), "left")))
+        .select(col("host"),
+          (lit(round + 1) + when(col("bannedFlag") === 1, lit(cfg.banBackoffTicks))
             .otherwise(greatest(
               politenessDelayCol(col("host"), round,
                 cfg.politenessCenterTicks, cfg.politenessRadiusTicks),
-              coalesce(col("rbDelayTicks"), lit(0L)))))
-        .select(col("host"), col("newTick"), col("nFails"))
+              rbDelayTicks))).as("newTick"),
+          col("nFails"))
       // only the hosts this round touched: the old failCount rides a right
       // join (touched side preserved, so newTick is never null); untouched
       // hosts stay as they are (round-2 scale-killer B: at 10^8 hosts a
       // full-outer rewrite was a frontier-sized write per round)
+      val failCount = (coalesce(col("failCount"), lit(0)) + col("nFails")).cast("int")
       val hostChanges = SnapshotStore.Changes(
         hosts.join(hostUpdates, Seq("host"), "right")
-          .withColumn("failCount2",
-            (coalesce(col("failCount"), lit(0)) + col("nFails")).cast("int"))
           .select(col("host"),
-            when(lit(cfg.maxHostFailures > 0) && col("failCount2") >= cfg.maxHostFailures,
+            when(lit(cfg.maxHostFailures > 0) && failCount >= cfg.maxHostFailures,
               lit(DeadTick))
               .otherwise(col("newTick")).as("nextTick"),
-            col("failCount2").as("failCount")),
-        Some(fetched.select("host"))) // the keys, from the fetched cache
+            failCount.as("failCount")),
+        Some(fetched.select("host"))) // the keys, from the fetched leaf
 
       // R7 shard update: cogroup on shard id — network cost ∝ new links +
       // touched shard bytes, driver cost zero; persisted with the snapshot
@@ -1039,6 +1056,7 @@ object CrawlEngine {
     } finally {
       restoreSettings()
       caches.foreach(_.unpersist(blocking = true))
+      leafRows.foreach(_.unpersist(blocking = true))
     }
   }
 

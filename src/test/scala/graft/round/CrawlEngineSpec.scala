@@ -330,6 +330,7 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     Seq(Some("3"), None).foreach { schemaVersion =>
       val dir = tmpDir(s"schema-${schemaVersion.getOrElse("none")}")
       val cachedBefore = GraftTestAccess.cachedPlanCount(spark)
+      val rddsBefore = GraftTestAccess.persistentRddIds(spark)
       CrawlEngine.crawl(spark, new SnapshotStore(dir, spark),
         corpus, CorpusGen.seeds(spec), cfg.copy(maxRounds = 1))
       val latest = new SnapshotStore(dir, spark).latestVersion.get
@@ -346,6 +347,8 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
         ex.getMessage)
       // neither the crawl that committed nor the refused one leaves a cache
       assert(GraftTestAccess.cachedPlanCount(spark) == cachedBefore, "the crawls left caches")
+      assert((GraftTestAccess.persistentRddIds(spark) -- rddsBefore).isEmpty,
+        "the crawls left persisted RDDs")
       assert(new SnapshotStore(dir, spark).latestVersion.contains(latest))
       assert(!Files.exists(java.nio.file.Paths.get(s"$dir/v=${latest + 1}")),
         "the refused round wrote state")
@@ -835,12 +838,15 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
       }))
       Seq(true, false).foreach { interpreted =>
         val cachedBefore = GraftTestAccess.cachedPlanCount(spark)
+        val rddsBefore = GraftTestAccess.persistentRddIds(spark)
         val ex = intercept[IllegalStateException](
           CrawlEngine.forcedInterpreted.withValue(Some(interpreted))(nextRound(failingSink)))
         assert(ex.getMessage == "raw sink down")
         assert(roundSettingValues == caller, s"a throwing round (interpreted=$interpreted) leaked its settings")
         assert(GraftTestAccess.cachedPlanCount(spark) == cachedBefore,
           s"a throwing round (interpreted=$interpreted) leaked its caches")
+        assert((GraftTestAccess.persistentRddIds(spark) -- rddsBefore).isEmpty,
+          s"a throwing round (interpreted=$interpreted) leaked its persisted leaves")
       }
     } finally original.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -1065,6 +1071,46 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("a round's commit writes start from its plan leaves: no corpus scan or rank cache in their plans") {
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val dir = tmpDir("plan-cut")
+    val corpus = CorpusTable.create(spark, spec)
+    val prodCfg = cfg.copy(frontierLayout = "delta", seenFilter = true, seenShards = 4)
+    // v0 only: its commit joins the seeds with the corpus, as it must
+    CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec),
+      prodCfg.copy(maxRounds = 0))
+    // (execution id, description, plan description) of each SQL execution
+    // start and of each adaptive re-plan
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Option[String], String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.add((s.executionId, Some(s.description), s.physicalPlanDescription))
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.add((u.executionId, None, u.physicalPlanDescription))
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      CrawlEngine.crawl(spark, new SnapshotStore(dir, spark), corpus, CorpusGen.seeds(spec),
+        prodCfg.copy(maxRounds = 1))
+      org.apache.spark.GraftSparkAccess.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(new SnapshotStore(dir, spark).latestVersion.contains(1))
+    val all = plans.asScala.toSeq
+    val commitIds = all.collect {
+      case (id, Some(d), _) if d.contains("parquet at SnapshotStore") => id
+    }.toSet
+    // frontier, hosts, results and seen
+    assert(commitIds.size >= 4, s"commit writes seen: ${commitIds.size}")
+    all.filter(p => commitIds(p._1)).foreach { case (id, _, plan) =>
+      Seq("graft_corpus_", "__pid").foreach { name =>
+        assert(!plan.contains(name), s"commit write $id plans over $name:\n$plan")
+      }
+    }
+  }
+
   test("jobs per round do not grow with delta depth; no round opens a table with a schema job") {
     val dir = tmpDir("job-budget")
     val corpus = CorpusTable.create(spark, spec)
@@ -1109,5 +1155,10 @@ class CrawlEngineSpec extends AnyFunSuite with SparkSpec {
     val tolerance = 2
     assert(counts(latest) <= counts(3) + tolerance,
       s"jobs per committed version grew with delta depth: ${counts.toSeq.sorted}")
+    // and an absolute budget: 42-43 jobs a committed version measured with
+    // the round's plans cut at its persisted leaves, plus the tolerance
+    val budget = 43 + tolerance
+    assert(counts.values.max <= budget,
+      s"jobs per committed version over the budget of $budget: ${counts.toSeq.sorted}")
   }
 }
